@@ -9,7 +9,8 @@ therefore deterministic under any parallelism.
 
 Each round is checkpointed through CheckpointStore (parquet snapshot with
 ``_SUCCESS`` commit marker + per-partition lineage/metrics rows); resume
-re-enters at the last complete round (FIXTURES.md §5.4).
+re-enters at the last complete round, or returns it outright when it carries
+the convergence marker (FIXTURES.md §5.4).
 """
 
 from __future__ import annotations
@@ -166,7 +167,9 @@ def connected_components(
     With ``store``, every round's edge state is a committed snapshot;
     ``resume=True`` re-enters at the last complete round and — because each
     round is a pure function of the previous snapshot — yields byte-identical
-    final assignments after any kill point.
+    final assignments after any kill point. The round the loop converged at
+    is marked once its snapshot has landed; resuming at a marked round
+    returns it as-is (no round, no star probe, no Spark job).
     """
     e = edges.select(
         F.col("src").cast("string"), F.col("dst").cast("string")
@@ -178,6 +181,8 @@ def connected_components(
         latest = store.latest_round(name)
         if latest is not None:
             e = store.read_round(name, latest)
+            if store.is_converged(name, latest):
+                return e.select(F.col("src").alias("node"), F.col("dst").alias("cluster_id"))
             start_round = latest + 1
             resumed = True
     import os
@@ -215,6 +220,7 @@ def connected_components(
     # metrics job instead of extra exceptAll shuffles (collision odds
     # ~2^-64; the edge sets are already distinct)
     prev = None
+    converged = None  # the round the loop reached its fixpoint at
     for k in range(start_round, max_rounds):
         t0 = time.time()
         new_e = _small_star(_large_star(e))
@@ -241,6 +247,7 @@ def connected_components(
                 file=sys.stderr,
             )
         if cur == prev:
+            converged = k
             break
         near_stable = prev is None or abs(prev[0] - cur[0]) <= max(
             64, prev[0] // 1000
@@ -259,11 +266,15 @@ def connected_components(
             # fires there.
             if profile:
                 print(f"# cc.star_fixpoint after round {k}", file=sys.stderr)
+            converged = k
             break
         prev = cur
 
     if store is not None:
         store.flush()  # join async per-round lineage/metrics writes
+        if converged is not None:
+            # after flush: the round's snapshot (an overwrite) has landed
+            store.mark_converged(name, converged)
     # star graph: every src points at its component min (dst)
     return e.select(F.col("src").alias("node"), F.col("dst").alias("cluster_id"))
 

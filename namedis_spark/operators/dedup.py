@@ -87,8 +87,8 @@ def _shingles_df(docs: DataFrame, text_col: str, n: int = 3) -> DataFrame:
     — measured ~8s at sf0.1 vs <1s for the same loop over Arrow batches
     (guide §4.2: hand whole batches to native code instead of evaluating
     an expression tree per element). Output is bit-identical: same
-    character grams, same md5 prefix, same first-occurrence dedup order
-    (dict.fromkeys) as array_distinct. The Python node is also the
+    character grams, same md5 prefix, same first-occurrence dedup of the
+    hashes (dict.fromkeys) as array_distinct. The Python node is also the
     materialization barrier the old groupBy(doc_id) stood in for —
     Catalyst cannot inline the normalization into downstream lambdas."""
     import hashlib
@@ -113,14 +113,20 @@ def _shingles_df(docs: DataFrame, text_col: str, n: int = 3) -> DataFrame:
                     # skips nulls, the i+2<=length(null) filter drops all)
                     out.append([])
                     continue
+                # hash, then dedup the ints (array_distinct over the hashes,
+                # as in the SQL chain): two grams whose 28-bit md5 prefixes
+                # collide count once. Deduping the grams first only skips
+                # repeat md5 calls; it keeps each hash's first occurrence.
                 grams = dict.fromkeys(
                     s[i : i + n] for i in range(len(s) - n + 1)
                 )
                 out.append(
-                    [
-                        int(md5(g.encode("utf-8")).hexdigest()[:7], 16)
-                        for g in grams
-                    ]
+                    list(
+                        dict.fromkeys(
+                            int(md5(g.encode("utf-8")).hexdigest()[:7], 16)
+                            for g in grams
+                        )
+                    )
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "shingles": out})
 

@@ -136,23 +136,21 @@ def conversation_features(transcripts: DataFrame) -> DataFrame:
     )
 
 
-_IRR_DF_MEMO: dict[int, "DataFrame"] = {}
-
-
 def _irregulars_df(spark) -> DataFrame:
     """Per-session memo of the irregular-lemma lookup table: the table is
     a constant, and re-running createDataFrame per query call re-paid the
-    driver-side conversion on every term-exploding query."""
+    driver-side conversion on every term-exploding query. The memo lives on
+    the session object itself, so it dies with the session, and an entry is
+    only returned to the session it was built on."""
     from namedis_spark.functions.text import IRREGULAR_LEMMAS
 
-    key = id(spark)
-    if key not in _IRR_DF_MEMO:
-        if len(_IRR_DF_MEMO) > 8:
-            _IRR_DF_MEMO.clear()
-        _IRR_DF_MEMO[key] = spark.createDataFrame(
+    df = getattr(spark, "_namedis_irregulars_df", None)
+    if df is None or df.sparkSession is not spark:
+        df = spark.createDataFrame(
             sorted(IRREGULAR_LEMMAS.items()), "_tok string, _irr_lemma string"
         )
-    return _IRR_DF_MEMO[key]
+        spark._namedis_irregulars_df = df
+    return df
 
 
 def exploded_content_terms(

@@ -16,6 +16,11 @@ Reference analog: the pair-similarity memo cache emptied per name
 (ConceptNet.pm:5788,5862-5879) becomes a *persisted* pair-score/edge
 snapshot; `loadCache`/`saveCache` (NLPUtil.pm:4419-4470) become round
 snapshots.
+
+Besides the snapshots, the store root holds a ``manifest.json`` (what the
+snapshots were computed from; the pipeline refuses to resume a store whose
+manifest differs) and a round may carry a ``_CONVERGED`` marker (the CC
+loop reached its fixpoint at that round, so resume has nothing to rerun).
 """
 
 from __future__ import annotations
@@ -37,6 +42,11 @@ from pyspark.sql import DataFrame, SparkSession
 # was 7.5-9.4 GB; shrinking the checkpoint half directly lifts the
 # bandwidth ceiling that capped 4-executor efficiency.
 SNAPSHOT_CODEC = "zstd"
+
+MANIFEST = "manifest.json"
+CONVERGED_MARKER = "_CONVERGED"
+# the row schema Spark stores in every parquet footer it writes
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class CheckpointStore:
@@ -257,7 +267,63 @@ class CheckpointStore:
         return rounds[-1] if rounds else None
 
     def read_round(self, name: str, k: int) -> DataFrame:
-        return self.spark.read.parquet(self._round_path(name, k))
+        """Round k as a lazy DataFrame. The schema comes from a snapshot
+        footer (driver-side), so no schema-inference job runs before the
+        DataFrame is used."""
+        path = self._round_path(name, k)
+        schema = self._footer_schema(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
+
+    @staticmethod
+    def _footer_schema(path: str):
+        import glob
+
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        if not files:
+            return None
+        raw = (pq.read_schema(files[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return StructType.fromJson(json.loads(raw)) if raw else None
+
+    def has_rounds(self, names) -> bool:
+        """True if any of ``names`` has a round directory, committed or
+        torn."""
+        for n in names:
+            base = os.path.join(self.root, n)
+            if os.path.isdir(base) and any(d.startswith("round=") for d in os.listdir(base)):
+                return True
+        return False
+
+    def clear(self, names) -> None:
+        """Delete every round of ``names`` (metrics rows stay)."""
+        import shutil
+
+        for n in names:
+            shutil.rmtree(os.path.join(self.root, n), ignore_errors=True)
+
+    def mark_converged(self, name: str, k: int) -> None:
+        """Record that committed round k is a fixpoint of ``name``'s loop."""
+        open(os.path.join(self._round_path(name, k), CONVERGED_MARKER), "w").close()
+
+    def is_converged(self, name: str, k: int) -> bool:
+        return os.path.exists(os.path.join(self._round_path(name, k), CONVERGED_MARKER))
+
+    def read_manifest(self) -> dict | None:
+        path = os.path.join(self.root, MANIFEST)
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            return json.load(f)
+
+    def write_manifest(self, manifest: dict) -> None:
+        """Write ``manifest.json`` atomically (temp file + rename)."""
+        path = os.path.join(self.root, MANIFEST)
+        with open(path + ".tmp", "w") as f:
+            json.dump(manifest, f, indent=1, sort_keys=True)
+        os.replace(path + ".tmp", path)
 
     def metrics(self) -> DataFrame:
         return self.spark.read.option("recursiveFileLookup", "true").parquet(

@@ -11,6 +11,10 @@ Sandbox usage (synthetic input):
 
     python scripts/run_pipeline.py --blocks 5 --checkpoint /tmp/ckpt --out /tmp/out
     python scripts/run_pipeline.py ... --resume     # re-enter after a kill
+
+--resume re-enters at the last committed stage (the summary's
+"resumed_from" names it) and is refused if the inputs or params differ
+from those recorded in the checkpoint's manifest.json.
 """
 
 from __future__ import annotations
@@ -56,10 +60,23 @@ def main() -> None:
     if args.input:
         transcripts = spark.read.parquet(args.input)
     else:
-        transcripts, labels = generate_transcripts(
-            spark, n_blocks=args.blocks, seed=args.seed, hot_blocks=args.hot_blocks
+        # Synthetic input is written under the checkpoint root, in a
+        # directory named by its generation options, and read back: the
+        # run's input fingerprint is then a set of files, so a --resume in
+        # a new process matches it (a generated plan's hash does not carry
+        # across processes), and a resume with other options is refused.
+        synth = os.path.join(
+            args.checkpoint, "input",
+            f"blocks={args.blocks},hot={args.hot_blocks},seed={args.seed}",
         )
-        transcripts.cache()
+        if not (args.resume and os.path.exists(os.path.join(synth, "labels", "_SUCCESS"))):
+            t, l = generate_transcripts(
+                spark, n_blocks=args.blocks, seed=args.seed, hot_blocks=args.hot_blocks
+            )
+            t.write.mode("overwrite").parquet(os.path.join(synth, "transcripts"))
+            l.write.mode("overwrite").parquet(os.path.join(synth, "labels"))
+        transcripts = spark.read.parquet(os.path.join(synth, "transcripts"))
+        labels = spark.read.parquet(os.path.join(synth, "labels"))
     if args.labels:
         labels = spark.read.parquet(args.labels)
 
@@ -81,6 +98,7 @@ def main() -> None:
         "clusters": n_clusters,
         "wall_sec": round(time.time() - t0, 1),
         "resumed": args.resume,
+        "resumed_from": res.resumed_from,
     }
     if res.metrics:
         summary.update({k: round(v, 6) for k, v in res.metrics.items()})

@@ -324,3 +324,26 @@ def test_lemma_sql_twins_match_python(spark):
         con.sql(f"SELECT w, {lemma_case('w')} AS l FROM (VALUES {vals}) t(w)").fetchall()
     )
     assert got_duck == expected
+
+
+def test_irregulars_memo_never_crosses_sessions(spark):
+    """The irregular-lemma memo lives on its session: another session (or
+    a stopped one a new session replaced, which is a different object)
+    never gets a DataFrame bound to it, even when an entry planted on the
+    session says otherwise — the id(spark)-keyed memo could hand a reused
+    id a dead session's DataFrame."""
+    from namedis_spark.operators.features import _irregulars_df
+
+    other = spark.newSession()
+    mine = _irregulars_df(spark)
+    assert mine.sparkSession is spark
+    assert _irregulars_df(spark) is mine  # memoized per session
+
+    theirs = _irregulars_df(other)
+    assert theirs is not mine and theirs.sparkSession is other
+
+    # an entry bound to another session is rebuilt, never returned
+    other._namedis_irregulars_df = mine
+    rebuilt = _irregulars_df(other)
+    assert rebuilt is not mine and rebuilt.sparkSession is other
+    assert rebuilt.count() == mine.count()

@@ -79,7 +79,6 @@ def test_table_buckets_matches_arithmetic_form(spark):
 
 def test_python_shingles_match_sql_chain(spark):
     from namedis_spark.operators.dedup import _shingles_df
-    from namedis_spark.functions.sqlexpr import tokens_expr
 
     rows = [
         (1, "The quick brown fox! Jumps over 42 lazy dogs."),
@@ -95,6 +94,13 @@ def test_python_shingles_match_sql_chain(spark):
         r["doc_id"]: r["shingles"]
         for r in _shingles_df(docs, "text").collect()
     }
+    assert fast == _sql_chain_shingles(docs)  # values AND first-occurrence order
+
+
+def _sql_chain_shingles(docs):
+    """doc_id -> shingles by the SQL md5 chain (array_distinct over the
+    28-bit hashes), the form the DuckDB oracle mirrors."""
+    from namedis_spark.functions.sqlexpr import tokens_expr
 
     toks = tokens_expr("text", "spark")
     norm = docs.select(
@@ -104,7 +110,7 @@ def test_python_shingles_match_sql_chain(spark):
         "transform(filter(sequence(1, greatest(length(_norm) - 2, 1)),"
         " i -> i + 2 <= length(_norm)), i -> substring(_norm, i, 3))"
     )
-    ref = {
+    return {
         r["doc_id"]: r["shingles"]
         for r in norm.select(
             "doc_id",
@@ -114,7 +120,25 @@ def test_python_shingles_match_sql_chain(spark):
             ).alias("shingles"),
         ).collect()
     }
-    assert fast == ref  # values AND first-occurrence order
+
+
+def test_python_shingles_dedup_colliding_hashes(spark):
+    """Two different grams with the same 28-bit md5 prefix ('pie' and
+    '3fj') are one shingle, as in the SQL chain and the DuckDB oracle."""
+    import hashlib
+
+    from namedis_spark.operators.dedup import _shingles_df
+
+    def h(g):
+        return hashlib.md5(g.encode()).hexdigest()[:7]
+
+    assert h("pie") == h("3fj")
+    docs = spark.createDataFrame(
+        [(1, "pie 3fj"), (2, "3fj pie pie")], "doc_id long, text string"
+    )
+    fast = {r["doc_id"]: r["shingles"] for r in _shingles_df(docs, "text").collect()}
+    assert fast == _sql_chain_shingles(docs)
+    assert len(fast[1]) == 4  # 5 grams, one colliding pair
 
 
 # ---------------------------------------------------------------------------
