@@ -2,7 +2,8 @@
 
 The reference clusters strictly within one ambiguous name's pub set
 (clust.pl:895-896); our blocking key is the normalized focus-speaker name.
-Candidate pairs come from three sources, unioned and deduped:
+Big blocks (more than ``ScoringParams.small_block_size`` conversations) get
+candidate pairs from two evidence sources, unioned and deduped:
 
 1. **shared-coauthor equi-join** — the reference's stage-1 trigger
    (mergeSharingCoauthor, NLPUtil.pm:3904-3941): explode (conv, coauthor),
@@ -12,9 +13,9 @@ Candidate pairs come from three sources, unioned and deduped:
    they still participate in scoring.
 2. **shared-rare-term equi-join** — stage-2 recall: terms with within-block
    df ≤ ``max_evidence_df``.
-3. **exhaustive pairs for small blocks** (size ≤ ``small_block_size``) —
-   where O(n²) is affordable, via a *salted bucket grid* so one hot block
-   never lands on one task.
+
+Small blocks need no pair table: ``scoring.score_blocks_exhaustive`` scores
+all their pairs inside the Python worker over a salted bucket grid.
 
 At 10^12 turns the evidence joins are the scale path: pair count grows with
 Σ df² per evidence key (bounded by the df cap), not with block size².
@@ -24,8 +25,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-PAIR_KEY_COLS = ["block_key", "conv_id1", "conv_id2"]
 
 
 def _canonical_pairs(df: DataFrame) -> DataFrame:
@@ -73,117 +72,3 @@ def evidence_pairs(
         (F.col("n_shared_coauthors") >= min_shared_coauthors)
         | (F.col("n_shared_terms") >= 1)
     )
-
-
-def all_pairs_salted(
-    features: DataFrame,
-    small_block_size: int = 64,
-    bucket_rows: int = 32,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
-    """Exhaustive within-block pairs for blocks of size <= small_block_size,
-    generated through a salted bucket grid: each conversation hashes into
-    one of B = ceil(n / bucket_rows) buckets; pair tasks are (bi <= bj)
-    bucket combinations, so a block's O(n²) work spreads over B(B+1)/2
-    tasks instead of one hot partition (the 'wei wang' salting duty,
-    SURVEY.md §4)."""
-    if sizes is None:
-        sizes = features.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
-    feats = features.join(
-        F.broadcast(sizes.where(F.col("n") <= small_block_size)), "block_key"
-    )
-    nb = F.ceil(F.col("n") / F.lit(bucket_rows)).cast("int")
-    feats = feats.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), nb).cast("int")
-    ).withColumn("n_buckets", nb)
-
-    # grid: (block_key, bi, bj) with bi <= bj
-    grid = (
-        feats.select("block_key", "n_buckets")
-        .distinct()
-        .select(
-            "block_key",
-            F.explode(F.sequence(F.lit(0), F.col("n_buckets") - 1)).alias("bi"),
-            "n_buckets",
-        )
-        .select(
-            "block_key",
-            "bi",
-            F.explode(F.sequence(F.col("bi"), F.col("n_buckets") - 1)).alias("bj"),
-        )
-    )
-
-    left = feats.select("block_key", F.col("bucket").alias("bi"), F.col("conv_id").alias("conv_id1"))
-    right = feats.select("block_key", F.col("bucket").alias("bj"), F.col("conv_id").alias("conv_id2"))
-    pairs = grid.join(left, ["block_key", "bi"]).join(right, ["block_key", "bj"])
-    # Canonicalize to unordered pairs. A cross-bucket cell (bi < bj) holds
-    # each unordered pair exactly once but with arbitrary id-order — a
-    # `conv_id1 < conv_id2` filter would silently DROP pairs whose id-order
-    # disagrees with the bucket-order; least/greatest keeps them. Same-bucket
-    # cells hold both orderings, so there the strict filter dedups.
-    pairs = pairs.where(
-        (F.col("bi") != F.col("bj")) | (F.col("conv_id1") < F.col("conv_id2"))
-    ).where(F.col("conv_id1") != F.col("conv_id2"))
-    return pairs.select(
-        "block_key",
-        F.least("conv_id1", "conv_id2").alias("conv_id1"),
-        F.greatest("conv_id1", "conv_id2").alias("conv_id2"),
-    )
-
-
-def candidate_pairs(
-    features: DataFrame,
-    max_evidence_df: int = 50,
-    small_block_size: int = 256,
-) -> DataFrame:
-    """Candidate pairs, routed by block size — the two paths partition the
-    block space, so their union needs no dedup shuffle:
-
-    * blocks with <= ``small_block_size`` conversations (the vast majority;
-      block sizes are stationary in corpus size): **exhaustive salted
-      pairs**. O(n²) per block is bounded by the size cap, and the
-      vectorized scorer prices a pair far below what the evidence join's
-      explode/self-join/aggregate chain costs per generated row. A pair
-      sharing no evidence scores 0 and fails the gate, so the extra pairs
-      only add recall headroom.
-    * larger (hot) blocks: **evidence-driven pairs** (shared coauthor /
-      shared rare term), whose pair count grows with Σ df² per evidence key
-      — bounded by the df cap — instead of block size². This is the scale
-      path for 'wei wang'-sized keys at 10^12 turns.
-
-    Output: (block_key, conv_id1, conv_id2, n_shared_coauthors,
-    n_shared_terms); counts are 0 on the exhaustive path (the scorer
-    recomputes its own shared-evidence channels either way)."""
-    sizes = features.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
-    big = features.join(
-        F.broadcast(sizes.where(F.col("n") > small_block_size).select("block_key")),
-        "block_key",
-    )
-    ev = evidence_pairs(big, max_evidence_df=max_evidence_df)
-    small = all_pairs_salted(
-        features, small_block_size=small_block_size, sizes=sizes
-    ).select(
-        "block_key",
-        "conv_id1",
-        "conv_id2",
-        F.lit(0).cast("bigint").alias("n_shared_coauthors"),
-        F.lit(0).cast("bigint").alias("n_shared_terms"),
-    )
-    return ev.unionByName(small)
-
-
-def attach_features(pairs: DataFrame, features: DataFrame) -> DataFrame:
-    """Join both sides' feature structs onto the pair table. The features
-    side is repartitioned by block_key so both joins reuse one exchange."""
-    fcols = [c for c in features.columns if c != "block_key"]
-    f1 = features.select(
-        "block_key",
-        F.col("conv_id").alias("conv_id1"),
-        F.struct(*fcols).alias("f1"),
-    )
-    f2 = features.select(
-        "block_key",
-        F.col("conv_id").alias("conv_id2"),
-        F.struct(*fcols).alias("f2"),
-    )
-    return pairs.join(f1, ["block_key", "conv_id1"]).join(f2, ["block_key", "conv_id2"])

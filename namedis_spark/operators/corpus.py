@@ -5,7 +5,9 @@ These produce the broadcast inputs of the scoring stage:
 * ``term_weights``   — TF-IAF term weighting (exterm.pl:517-733)
 * ``key_ambiguity``  — name-ambiguity fixed point (cnambig.pl:452-782)
 * ``tool_simi``      — venue-similarity regression (venuesimi.pl:157-229)
-* ``term_ic``        — taxonomy term information content (ConceptNet.pm:4931-4970)
+* ``term_and_name_stats`` + ``idf_ic_from_stats`` — term idf, taxonomy
+  category information content (ConceptNet.pm:4931-4970) and name-part
+  log-probabilities
 
 All pure DataFrame aggregation / joins — map-side combinable groupBys, no
 Python rows. At 100 TB these are the one-time EP2 "statistics pipeline"
@@ -15,7 +17,7 @@ jobs; their outputs are small (≤ millions of rows) and broadcast.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # exterm.pl constants
 IAF_LEAST_VALUE = 0.5  # exterm.pl:17
@@ -28,6 +30,9 @@ AMBIG_SEED_SOLO_W = 1.3
 AMBIG_ITER_SCALE = 1.22
 AMBIG_MAX_ROUNDS = 20
 AMBIG_CONVERGE_ABS = 500.0
+
+# synthetic taxonomy: category freq pass-up attenuation (ConceptNet.pm:27)
+TAXO_ATTENUATION = 0.8
 
 
 def conv_author_hits(features: DataFrame) -> DataFrame:
@@ -129,44 +134,26 @@ def term_weights(features: DataFrame) -> DataFrame:
     ).withColumn("tfiaf", F.round(F.col("tf") * F.col("iaf"), 6))
 
 
-def term_idf(features: DataFrame) -> DataFrame:
-    """Plain idf over conversations: log(N/df) — the normalized TF-IDF
-    cosine term of the north star uses this; TF-IAF above is the reference-
-    faithful variant."""
-    n = features.count()
-    return (
-        features.select("conv_id", F.explode(F.map_keys("term_freq")).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .select("term", F.round(F.log(F.lit(float(n)) / F.col("df")), 6).alias("idf"))
-    )
-
-
-def term_stats_rows(features: DataFrame) -> list:
-    """One-scan term statistics: (term, df, freq) per term. Feeds both the
-    idf dict (log(N/df)) and the IC dict (log(MC) − log(freq) with category
-    pass-up) driver-side — ``term_idf`` and ``term_ic`` each rescan the
-    corpus for one aggregate; the pipeline wants both from a single
-    explode+groupBy job (the collected table is vocab-sized, not
-    corpus-sized)."""
-    return (
-        features.select("conv_id", F.explode("term_freq").alias("term", "tfreq"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"), F.sum("tfreq").alias("freq"))
-        .collect()
-    )
-
-
 def term_and_name_stats(features: DataFrame):
     """Term statistics and name-part log-probability tables from ONE Spark
     job: the two aggregates (explode(term_freq) → per-term df/freq, and
     two-part focus-surface → (given, surname) occurrence counts) are
-    unioned into a common tagged schema and collected together. Results are
-    identical to ``term_stats_rows`` + ``name_part_logprobs`` run
-    separately; sharing the job removes one scheduling barrier from the
-    pipeline's side-table stage (both collects are vocab-/surface-sized).
+    unioned into a common tagged schema and collected together; sharing
+    the job removes one scheduling barrier from the pipeline's side-table
+    stage (both collects are vocab-/surface-sized).
 
-    Returns (term_rows, (surname_logprob_dict, given_logprob_dict))."""
+    The name-part tables feed the name-order vote (the SURNAMES /
+    GIVEN_NAMES sections of ambiguity.csv, cnambig.pl:534-576; loaded as
+    logSurnameProb / logGivennameProb, NLPUtil.pm:1878-1949). Documented
+    simplification vs ``name_part_probs``: weights are raw surface
+    occurrence counts over two-part focus surfaces (forward convention:
+    first part given, last part surname) instead of the ambiguity
+    fixed-point mass — the vote only consumes likelihood RATIOS, and
+    occurrence weighting preserves those without re-running the fixed
+    point.
+
+    Returns (term_rows, (surname_logprob_dict, given_logprob_dict)); each
+    term row is {term, df, freq}."""
     import math as _math
 
     terms = (
@@ -219,9 +206,11 @@ def term_and_name_stats(features: DataFrame):
 
 
 def idf_ic_from_stats(term_rows: list, n_convs: int) -> tuple[dict, dict]:
-    """Derive (idf dict, cat-IC dict) from ``term_stats_rows`` output,
-    matching ``term_idf`` / ``term_ic`` semantics (same formulas, same
-    6-decimal rounding)."""
+    """Derive (idf dict, cat-IC dict) from ``term_and_name_stats``'s term
+    rows: idf = log(N/df) over conversations, and category IC =
+    log(MC) − log(freq) after the attenuated pass-up of term counts to
+    their synthetic category (trainDBLPFile + calcNetIC,
+    ConceptNet.pm:5315-5411, 4931-4970). Both rounded to 6 decimals."""
     import math
 
     idf = {
@@ -233,9 +222,9 @@ def idf_ic_from_stats(term_rows: list, n_convs: int) -> tuple[dict, dict]:
         f = float(r["freq"])
         mc = max(mc, f)
         t = r["term"]
-        # term_category analog: termXXXX → cat_{XXXX mod 40}
-        # isdecimal() mirrors the DataFrame-side ASCII-\d+ regex exactly;
-        # isdigit() would accept superscript digits that int() rejects.
+        # synthetic taxonomy (scoring.category_of): termXXXX → cat_{XXXX mod 40}
+        # isdecimal() accepts the digits category_of's \d+ accepts (Unicode
+        # Nd); isdigit() would also accept superscripts that int() rejects.
         if t.startswith("term") and t[4:].isdecimal():
             c = f"cat_{int(t[4:]) % 40:02d}"
             cat_freq[c] = cat_freq.get(c, 0.0) + f
@@ -363,53 +352,6 @@ def key_ambiguity(
             .select("name", "occurrence", "ambig", "surname", "givenname")
         )
     return ambig.select("name", "occurrence", F.round("ambig", 6).alias("ambig"))
-
-
-def key_ambiguity_rows(
-    features: DataFrame,
-    rounds: int = AMBIG_MAX_ROUNDS,
-    hits: DataFrame | None = None,
-) -> list:
-    """``key_ambiguity`` with the fixed-point iteration run driver-side.
-
-    The heavy lifting — name extraction, occurrence counts, seed heuristics
-    — stays distributed (two groupBy jobs). The iteration itself operates on
-    the *name table* (one row per distinct person name), which is exactly
-    the table the scoring stage collects into a broadcast dict anyway: it is
-    driver-sized by design (≤ real-world name vocabulary, NOT corpus-sized).
-    Running the 20-round fixed point as pandas groupbys on that collected
-    table replaces ~4 barrier-latency Spark jobs per round with
-    sub-millisecond driver math — on a cluster those barriers are the
-    dominant cost of the side-table stage, and they do not parallelize.
-
-    Returns a list of dict rows (name, occurrence, ambig) identical in
-    semantics to ``key_ambiguity(...).collect()`` (same seed, same update
-    rule, same rounding; float sums may differ in the last ulp from Spark's
-    aggregation order, both rounded to 6 decimals).
-    """
-    return key_ambiguity_frame(features, rounds=rounds, hits=hits).to_dict("records")
-
-
-def key_ambiguity_frame(
-    features: DataFrame,
-    rounds: int = AMBIG_MAX_ROUNDS,
-    hits: DataFrame | None = None,
-):
-    """``key_ambiguity_rows`` returning the pandas frame (name, occurrence,
-    ambig) directly — the row-dict conversion is O(names) driver time that
-    the pipeline's pruning path never needs.
-
-    The pull is O(distinct names), NOT O(corpus): bounded by the real-world
-    name vocabulary, like the broadcast dicts the scoring stage builds from
-    it. Callers that cannot assume a driver-sized name universe must use
-    ``key_ambiguity_pdf_bounded`` (graceful distributed fallback) or the
-    fully-distributed ``key_ambiguity``.
-    """
-    # surname/givenname split in Spark (JVM string ops beat 10M-row pandas
-    # object ops); the iteration itself runs on integer codes + bincount —
-    # per round it is two O(names) gathers, not string groupbys.
-    df = _ambiguity_seed(features, hits).toPandas()
-    return _iterate_ambiguity_frame(df, rounds)
 
 
 def _iterate_ambiguity_frame(df, rounds: int):
@@ -615,60 +557,6 @@ def name_part_probs(features: DataFrame, rounds: int = 1) -> DataFrame:
     return out
 
 
-IC_OFFSET = 3.5  # setICOffset (clust.pl:277)
-LCS_MAX_DEPTH_SUM = 3  # leastCommonSubsumer depth gate (ConceptNet.pm:5630-5655)
-
-
-def term_closeness(features: DataFrame, category_expr=None) -> DataFrame:
-    """Concept/LCS closeness (calcTermCloseness, ConceptNet.pm:5630-5655;
-    leastCommonSubsumer, ConceptNet.pm:3283-3361): for term pairs whose
-    least common subsumer lies within combined depth ≤ 3, closeness =
-    IC(lcs) − ICOffset.
-
-    Under the synthetic 3-level taxonomy (term → cat → supercat → root,
-    build_taxonomy) the depth gate admits exactly the same-category pairs
-    (depth-sum 2); same-supercat pairs sit at depth-sum 4 and are gated
-    out, mirroring how the reference rejects distant subsumers. Returns
-    (term1, term2, lcs, closeness) for distinct co-categorized terms.
-
-    ``category_expr`` overrides the term→category edge function (default:
-    the pipeline's synthetic termNNNN taxonomy); callers running over a
-    different vocabulary supply their own deterministic mapping."""
-    tf = (
-        features.select(F.explode("term_freq").alias("term", "freq"))
-        .groupBy("term")
-        .agg(F.sum("freq").alias("freq"))
-    )
-    cat_fn = category_expr if category_expr is not None else term_category
-    cat = tf.withColumn("cat", cat_fn(F.col("term"))).where(
-        F.col("cat").isNotNull()
-    )
-    cat_freq = (
-        cat.groupBy("cat")
-        .agg((F.sum("freq") * TAXO_ATTENUATION).alias("freq"))
-        .withColumnRenamed("cat", "term")
-    )
-    mc = (
-        tf.select(F.max("freq").alias("m"))
-        .unionByName(cat_freq.select(F.max("freq").alias("m")))
-        .agg(F.max("m"))
-        .collect()[0][0]
-    )
-    cat_ic = cat_freq.select(
-        F.col("term").alias("lcs"),
-        F.round(F.log(F.lit(float(mc))) - F.log("freq"), 6).alias("ic"),
-    )
-    a = cat.select(F.col("term").alias("term1"), F.col("cat").alias("lcs"))
-    b = cat.select(F.col("term").alias("term2"), F.col("cat").alias("lcs"))
-    pairs = a.join(b, "lcs").where(F.col("term1") < F.col("term2"))
-    return pairs.join(F.broadcast(cat_ic), "lcs").select(
-        "term1",
-        "term2",
-        "lcs",
-        F.round(F.col("ic") - F.lit(IC_OFFSET), 6).alias("closeness"),
-    )
-
-
 def prune_evidence_tables(
     amb_pdf,
     cn_pdf,
@@ -861,89 +749,3 @@ def tool_simi(features: DataFrame, min_shared: int = 1) -> DataFrame:
         F.col("count1").cast("long").alias("count1"),
         F.col("count2").cast("long").alias("count2"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Synthetic taxonomy + information content (ConceptNet analog)
-# ---------------------------------------------------------------------------
-
-TAXO_ATTENUATION = 0.8  # freq pass-up attenuation (ConceptNet.pm:27)
-
-
-def build_taxonomy(spark: SparkSession, vocab_prefix: str = "term", n_cats: int = 40) -> DataFrame:
-    """Deterministic mini-taxonomy over the synthetic vocabulary
-    (FIXTURES.md §3): term → category → super-category → root.
-    Edge format mirrors wikipedia/csmathling.txt (term, parent, depth)."""
-    rows = []
-    for c in range(n_cats):
-        super_c = f"supercat_{c % 5:02d}"
-        rows.append((f"cat_{c:02d}", super_c, 2))
-    for s in range(5):
-        rows.append((f"supercat_{s:02d}", "CONCEPT_NET_ROOT", 1))
-    return spark.createDataFrame(rows, "term string, parent string, depth int")
-
-
-def term_category(term_col):
-    """Deterministic term → category mapping for the synthetic vocab:
-    termXXXX → cat_{XXXX mod 40}. JVM-side expression."""
-    num = F.regexp_extract(term_col, r"^term(\d+)$", 1)
-    return F.when(num != "", F.concat(F.lit("cat_"), F.lpad(F.pmod(num.cast("int"), F.lit(40)).cast("string"), 2, "0")))
-
-
-def term_ic(features: DataFrame) -> DataFrame:
-    """Term/category information content (trainDBLPFile + calcNetIC,
-    ConceptNet.pm:5315-5411, 4931-4970): distributed term-freq aggregation
-    with attenuated pass-up to categories; IC = log(MC) − log(freq)."""
-    tf = (
-        features.select(F.explode("term_freq").alias("term", "freq"))
-        .groupBy("term")
-        .agg(F.sum("freq").alias("freq"))
-    )
-    cat = tf.withColumn("cat", term_category(F.col("term"))).where(F.col("cat").isNotNull())
-    cat_freq = cat.groupBy("cat").agg(
-        (F.sum("freq") * TAXO_ATTENUATION).alias("freq")
-    ).withColumnRenamed("cat", "term")
-    all_freq = tf.unionByName(cat_freq)
-    mc = all_freq.agg(F.max("freq")).collect()[0][0]
-    return all_freq.select(
-        "term", "freq", F.round(F.log(F.lit(float(mc))) - F.log("freq"), 6).alias("ic")
-    )
-
-
-def name_part_logprobs(features: DataFrame):
-    """Occurrence-weighted surname/givenname log-probability tables for
-    the name-order vote (the SURNAMES / GIVEN_NAMES sections of
-    ambiguity.csv, cnambig.pl:534-576; loaded as logSurnameProb /
-    logGivennameProb, NLPUtil.pm:1878-1949).
-
-    Documented simplification vs name_part_probs: weights are raw surface
-    occurrence counts over two-part focus surfaces (forward convention:
-    first part given, last part surname) instead of the ambiguity
-    fixed-point mass — the vote only consumes likelihood RATIOS, and
-    occurrence weighting preserves those without re-running the fixed
-    point. Returns two driver-side dicts (part → ln prob); the name-part
-    vocabulary is side-table-sized by construction."""
-    import math as _math
-
-    surf = (
-        features.select(F.lower(F.col("focus_raw")).alias("s"))
-        .withColumn("s", F.regexp_replace("s", "-", ""))
-        .withColumn("parts", F.split("s", " +"))
-        .where(F.size("parts") == 2)
-        .select(
-            F.element_at("parts", 1).alias("given"),
-            F.element_at("parts", 2).alias("surname"),
-        )
-        .groupBy("given", "surname")
-        .agg(F.count(F.lit(1)).alias("occ"))
-    ).collect()
-    sur_cnt: dict[str, float] = {}
-    giv_cnt: dict[str, float] = {}
-    for r in surf:
-        sur_cnt[r["surname"]] = sur_cnt.get(r["surname"], 0.0) + r["occ"]
-        giv_cnt[r["given"]] = giv_cnt.get(r["given"], 0.0) + r["occ"]
-    s_tot = sum(sur_cnt.values()) or 1.0
-    g_tot = sum(giv_cnt.values()) or 1.0
-    sur_lp = {k: _math.log(v / s_tot) for k, v in sur_cnt.items()}
-    giv_lp = {k: _math.log(v / g_tot) for k, v in giv_cnt.items()}
-    return sur_lp, giv_lp

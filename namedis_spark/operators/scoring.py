@@ -42,17 +42,18 @@ from namedis_spark.functions.core import (
     shared_coauthor_boost,
     term_freq_thres_by_ambig,
     tfidf_cosine,
-    weighted_jaccard,
     year_diff_discount,
     year_range_diff,
 )
+from namedis_spark.operators.corpus import idf_ic_from_stats
 
 _TERM_CAT_RE = re.compile(r"^term(\d+)$")
 
 
 def category_of(term: str) -> str | None:
-    """Deterministic synthetic-taxonomy mapping (mirrors
-    corpus.term_category): termXXXX → cat_{XXXX mod 40}."""
+    """Deterministic synthetic-taxonomy mapping (the same one
+    corpus.idf_ic_from_stats passes term counts up by): termXXXX →
+    cat_{XXXX mod 40}."""
     m = _TERM_CAT_RE.match(term)
     if not m:
         return None
@@ -159,8 +160,9 @@ def score_one_pair(
     surname_lp: dict[str, float] | None = None,
     given_lp: dict[str, float] | None = None,
 ) -> dict:
-    """Score a single conversation pair. Pure Python — unit-testable oracle;
-    the pandas UDF below maps it over Arrow batches."""
+    """Score a single conversation pair. Pure Python — the oracle the
+    production kernels (``score_pairs_grouped``, ``score_blocks_exhaustive``)
+    are parity-tested against."""
     focus = f1["focus_name"]
     co1 = _freq_map(f1["coauthors"])
     co2 = _freq_map(f2["coauthors"])
@@ -349,113 +351,45 @@ class SideTables:
     max_df: float = 0.0
     # surname/givenname log-probability tables for the name-order vote
     # (testChnNameReverse, NLPUtil.pm:1750-1851; built by
-    # corpus.name_part_logprobs)
+    # corpus.term_and_name_stats)
     surname_lp: dict[str, float] = field(default_factory=dict)
     given_lp: dict[str, float] = field(default_factory=dict)
 
-
-def collect_side_tables(
-    features: DataFrame,
-    ambiguity: DataFrame | None = None,
-    coauthor_counts: DataFrame | None = None,
-    idf: DataFrame | None = None,
-    tool_similarity: DataFrame | None = None,
-    ic: DataFrame | None = None,
-    name_order: bool = False,
-) -> SideTables:
-    """Materialize the (small) corpus side tables into broadcast dicts."""
-    st = SideTables()
-    if ambiguity is not None:
-        st.ambig = {r["name"]: float(r["ambig"]) for r in ambiguity.collect()}
-        st.ambig_sum_total = max(1.0, sum(st.ambig.values()))
-    if coauthor_counts is not None:
-        st.cn_counts = {
-            r["name"]: float(r["n_coauthors"]) for r in coauthor_counts.collect()
-        }
-    if idf is not None:
-        st.idf = {r["term"]: float(r["idf"]) for r in idf.collect()}
-        st.n_docs = float(features.select("conv_id").distinct().count())
-        if st.idf:
-            st.max_df = st.n_docs * math.exp(-min(st.idf.values()))
-    if tool_similarity is not None:
-        m: dict[str, list[tuple[str, float]]] = {}
-        for r in tool_similarity.collect():
-            m.setdefault(r["tool1"], []).append((r["tool2"], float(r["linreg_simi"])))
-        for v in m.values():
+    @classmethod
+    def from_stats(
+        cls,
+        pruned: tuple[dict, dict, float],
+        term_rows: list,
+        n_convs: int,
+        tool_rows: list,
+        name_part_lps: tuple[dict, dict],
+    ) -> SideTables:
+        """Assemble the side tables from the corpus jobs' driver-side
+        outputs: ``pruned`` = (ambig, cn_counts, ambig_sum_total) from
+        ``corpus.prune_evidence_tables`` or its ``_df`` twin; ``term_rows``
+        and ``name_part_lps`` from ``corpus.term_and_name_stats``;
+        ``tool_rows`` the collected ``corpus.tool_simi`` rows."""
+        ambig, cn_counts, ambig_sum_total = pruned
+        idf, cat_ic = idf_ic_from_stats(term_rows, n_convs)
+        n_docs = float(n_convs)
+        tool_map: dict[str, list[tuple[str, float]]] = {}
+        for r in tool_rows:
+            tool_map.setdefault(r["tool1"], []).append((r["tool2"], float(r["linreg_simi"])))
+        for v in tool_map.values():
             v.sort(key=lambda kv: (-kv[1], kv[0]))
-        st.tool_simi_map = m
-    if ic is not None:
-        st.cat_ic = {
-            r["term"]: float(r["ic"]) for r in ic.collect() if r["term"].startswith("cat_")
-        }
-    if name_order:
-        from namedis_spark.operators.corpus import name_part_logprobs
-
-        st.surname_lp, st.given_lp = name_part_logprobs(features)
-    return st
-
-
-def score_pairs(
-    spark: SparkSession,
-    pairs_with_features: DataFrame,
-    side: SideTables,
-    params: ScoringParams | None = None,
-) -> DataFrame:
-    """Apply the scoring UDF to (block_key, conv_id1, conv_id2, f1, f2).
-
-    Returns the pair table with all score components flattened in. The UDF
-    is Arrow-batched (mapInPandas); side tables ride a SparkContext
-    broadcast so each executor deserializes them once.
-    """
-    params = params or ScoringParams()
-    bc = spark.sparkContext.broadcast(
-        {
-            "ambig": side.ambig,
-            "cn_counts": side.cn_counts,
-            "ambig_sum_total": side.ambig_sum_total,
-            "idf": side.idf,
-            "tool_simi_map": side.tool_simi_map,
-            "cat_ic": side.cat_ic,
-            "n_docs": side.n_docs,
-            "max_df": side.max_df,
-            "surname_lp": side.surname_lp,
-            "given_lp": side.given_lp,
-            "params": params,
-        }
-    )
-
-    in_schema = pairs_with_features.schema
-    out_schema = T.StructType(list(in_schema.fields) + list(SCORE_SCHEMA.fields))
-    pass_cols = [f.name for f in in_schema.fields]
-
-    def scorer(batches):
-        sv = bc.value
-        p: ScoringParams = sv["params"]
-        kw = dict(
-            ambig=sv["ambig"],
-            cn_counts=sv["cn_counts"],
-            ambig_sum_total=sv["ambig_sum_total"],
-            idf=sv["idf"],
-            tool_simi_map=sv["tool_simi_map"],
-            cat_ic=sv["cat_ic"],
-            n_docs=sv["n_docs"],
-            max_df=sv["max_df"],
-            surname_lp=sv["surname_lp"],
-            given_lp=sv["given_lp"],
-            params=p,
+        surname_lp, given_lp = name_part_lps
+        return cls(
+            ambig=ambig,
+            cn_counts=cn_counts,
+            ambig_sum_total=ambig_sum_total,
+            idf=idf,
+            tool_simi_map=tool_map,
+            cat_ic=cat_ic,
+            n_docs=n_docs,
+            max_df=n_docs * math.exp(-min(idf.values())) if idf else 0.0,
+            surname_lp=surname_lp,
+            given_lp=given_lp,
         )
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            results = [
-                score_one_pair(f1, f2, **kw)
-                for f1, f2 in zip(pdf["f1"], pdf["f2"])
-            ]
-            res = pd.DataFrame(results)
-            out = pd.concat([pdf[pass_cols].reset_index(drop=True), res], axis=1)
-            yield out
-
-    return pairs_with_features.mapInPandas(scorer, schema=out_schema)
 
 
 PREP_SCHEMA = T.StructType(
@@ -615,266 +549,6 @@ def prepare_scoring(
         "tool_freq", "venue", "term_freq", "year_from", "year_to",
     ]
     return features.select(*cols).mapInPandas(prep, schema=PREP_SCHEMA)
-
-
-def score_pairs_fast(
-    spark: SparkSession,
-    pairs_with_prep: DataFrame,
-    side: SideTables,
-    params: ScoringParams | None = None,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Scoring over pairs carrying *prepared* feature structs (f1, f2 from
-    ``prepare_scoring``). Semantically identical to mapping
-    ``score_one_pair`` (the unit-test oracle) over the raw structs; the
-    cosine/ic channels run on presorted numeric arrays and all
-    per-conversation state is memoized per Arrow batch.
-
-    The input is hash-repartitioned on the pair key to ``partitions``
-    (default 3x defaultParallelism): the stage's cost is Python CPU, so
-    partitioning must track cores — AQE's byte-based coalescing would
-    under-parallelize it (and hot blocks would skew it).
-    """
-    import numpy as np
-
-    params = params or ScoringParams()
-    bc = spark.sparkContext.broadcast(
-        {
-            "ambig": side.ambig,
-            "cn_counts": side.cn_counts,
-            "ambig_sum_total": side.ambig_sum_total,
-            "tool_simi_map": side.tool_simi_map,
-            "n_docs": side.n_docs,
-            "max_df": side.max_df,
-            "params": params,
-        }
-    )
-
-    in_schema = pairs_with_prep.schema
-    # the fat prepared structs are scoring *inputs* only — never Arrow-ship
-    # them back out of the Python worker
-    pass_cols = [f.name for f in in_schema.fields if f.name not in ("f1", "f2")]
-    out_schema = T.StructType(
-        [f for f in in_schema.fields if f.name in pass_cols] + list(SCORE_SCHEMA.fields)
-    )
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism * 3
-    pairs_with_prep = pairs_with_prep.repartition(partitions, "conv_id1", "conv_id2")
-
-    def scorer(batches):
-        sv = bc.value
-        p: ScoringParams = sv["params"]
-        ambig = sv["ambig"]
-        cn_counts = sv["cn_counts"]
-        ambig_sum_total = sv["ambig_sum_total"]
-        n_docs = sv["n_docs"]
-        max_df = sv["max_df"]
-        expander = (
-            make_tool_expander(sv["tool_simi_map"]) if sv["tool_simi_map"] else None
-        )
-        # Per-batch memo tables — every quantity below depends only on a
-        # conversation, a focus name, or a (focus, coauthor) pair, never on
-        # the pair itself, so each is computed once per Arrow batch instead
-        # of once per candidate pair.
-        conv_memo: dict[str, tuple] = {}
-        jw_memo: dict[tuple[str, str], float] = {}
-        focus_memo: dict[str, tuple] = {}
-        err_memo: dict[tuple[str, str], float] = {}
-        tool_cslr_memo: dict[tuple, float] = {}
-
-        def focus_state(focus: str) -> tuple:
-            st = focus_memo.get(focus)
-            if st is None:
-                is_amb = focus in ambig
-                if is_amb:
-                    cnt_thres, amb_thres = evidence_thresholds(
-                        focus, p.error_tolerance, ambig, cn_counts, ambig_sum_total
-                    )
-                else:
-                    cnt_thres = amb_thres = 0.0
-                oe = overestimate_ambig(focus, ambig)
-                gate_thres = p.ic_gate_scale * math.log(max(oe, math.e))
-                # freqSumThres for the single-shared-term veto
-                # (ConceptNet.pm:5837-5838)
-                fst = (
-                    max_df * p.max_single_shared_ambig / (oe * p.share_randomness_boost)
-                    if max_df > 0
-                    else 0.0
-                )
-                st = (is_amb, cnt_thres, amb_thres, gate_thres, fst)
-                focus_memo[focus] = st
-            return st
-
-        def conv_state(cid: str, f: dict) -> tuple:
-            st = conv_memo.get(cid)
-            if st is None:
-                co = dict(zip(f["co_k"], f["co_f"]))
-                tools = dict(zip(f["tool_k"], f["tool_f"]))
-                is_amb, cnt_thres, amb_thres, _, fst = focus_state(f["focus_name"])
-                if is_amb:
-                    # strong-evidence filter (NLPUtil.pm:4207-4217) is a
-                    # function of the conversation alone (its block's focus
-                    # thresholds are fixed) — precompute per conversation
-                    strong = {
-                        c: v
-                        for c, v in co.items()
-                        if c not in cn_counts
-                        or (
-                            cn_counts[c] <= cnt_thres
-                            and overestimate_ambig(c, ambig) <= amb_thres
-                        )
-                    }
-                else:
-                    strong = co
-                idf_arr = np.asarray(f["t_idf"], dtype=np.float64)
-                dfs = n_docs * np.exp(-idf_arr) if n_docs > 0 else idf_arr * 0.0
-                vec_thres = (
-                    term_freq_thres_by_ambig(dfs.tolist(), fst) if max_df > 0 else 0.0
-                )
-                st = (
-                    co,
-                    strong,
-                    tools,
-                    tuple(sorted(tools.items())),
-                    np.asarray(f["t_ids"], dtype=np.int64),
-                    np.asarray(f["t_w"], dtype=np.float64),
-                    idf_arr,
-                    float(f["t_norm"]),
-                    np.asarray(f["cat"], dtype=np.float64),
-                    float(f["cat_norm"]),
-                    dfs,
-                    vec_thres,
-                )
-                conv_memo[cid] = st
-            return st
-
-        def pair_error(focus: str, c: str) -> float:
-            e = err_memo.get((focus, c))
-            if e is None:
-                e = coauthor_evidence_error(focus, c, ambig, cn_counts, ambig_sum_total)
-                err_memo[(focus, c)] = e
-            return e
-
-        def score(cid1, cid2, f1, f2) -> tuple:
-            focus = f1["focus_name"]
-            (co1, s1, tools1, tk1, ids1, w1, idf1, n1, cat1, cn1,
-             dfs1, vth1) = conv_state(cid1, f1)
-            (co2, s2, tools2, tk2, ids2, w2, idf2, n2, cat2, cn2,
-             dfs2, vth2) = conv_state(cid2, f2)
-            shared = [c for c in co1 if c in co2]
-            is_ambiguous, cnt_thres, amb_thres, gate_thres, _fst = focus_state(focus)
-
-            # ---- stage 1 (identical logic to score_one_pair) -----------
-            mergeable = False
-            reason = None
-            if not is_ambiguous:
-                if len(shared) >= p.plain_min_shared:
-                    mergeable, reason = True, "shared>=2"
-            elif shared:
-                shared_strong = [c for c in s1 if c in s2]
-                if shared_strong and (
-                    len(shared_strong) == len(s1) or len(shared_strong) == len(s2)
-                ):
-                    mergeable, reason = True, "subset"
-                else:
-                    err = min(pair_error(focus, c) for c in shared)
-                    if err <= p.error_tolerance:
-                        mergeable, reason = True, "evidence-error"
-
-            cslr_co = 0.0
-            if not mergeable and is_ambiguous and shared:
-                k1 = s1 if len(s1) > 2 else co1
-                k2 = s2 if len(s2) > 2 else co2
-                if len(k1) > 1 and len(k2) > 1:
-                    _, cslr_co = cslr_v2(k1, k2, min_odds=0.0, max_counted_freq=4)
-                    if cslr_co >= p.same_mn_odds_thres:
-                        mergeable, reason = True, "cslr-odds"
-            elif shared:
-                _, cslr_co = cslr_v2(co1, co2, min_odds=0.0, max_counted_freq=4)
-
-            # ---- stage 2 channels --------------------------------------
-            # tool vectors are tiny (handful of tools) and repeat heavily
-            # across pairs — memoize by the ordered (vector, vector) key
-            # (ordered because cslr_v2's multinomial-side tie-break depends
-            # on argument order, NLPUtil.pm:3501-3513)
-            cslr_tool = tool_cslr_memo.get((tk1, tk2))
-            if cslr_tool is None:
-                _, cslr_tool = cslr_v2(tools1, tools2, min_odds=0.0, max_counted_freq=4)
-                if expander is not None:
-                    _, cslr_tool_exp = cslr_v2(
-                        tools1, tools2, outcome_expander=expander,
-                        min_odds=0.0, max_counted_freq=4,
-                    )
-                    cslr_tool = max(cslr_tool, cslr_tool_exp)
-                tool_cslr_memo[(tk1, tk2)] = cslr_tool
-
-            r1 = f1["focus_oriented"] or f1["focus_raw"] or focus
-            r2 = f2["focus_oriented"] or f2["focus_raw"] or focus
-            jw = jw_memo.get((r1, r2))
-            if jw is None:
-                jw = jaro_winkler(r1, r2)
-                jw_memo[(r1, r2)] = jw
-
-            _, i1, i2 = np.intersect1d(
-                ids1, ids2, assume_unique=True, return_indices=True
-            )
-            dot = float(np.dot(w1[i1], w2[i2]))
-            content = dot / (n1 * n2) if dot != 0.0 else 0.0
-            ic_sum = float(idf1[i1].sum())
-
-            # single-shared-term veto (identical to score_one_pair)
-            if (
-                p.single_term_veto
-                and i1.size == 1
-                and max_df > 0
-                and float(dfs1[i1[0]]) > min(vth1, vth2)
-            ):
-                content = 0.0
-                ic_sum = 0.0
-
-            cdot = float(np.dot(cat1, cat2))
-            taxonomy = cdot / (cn1 * cn2) if cdot != 0.0 else 0.0
-
-            ydisc = year_diff_discount(
-                year_range_diff(
-                    f1["year_from"], f1["year_to"], f2["year_from"], f2["year_to"]
-                )
-            )
-            boost = min(
-                shared_coauthor_boost(focus, shared, ambig, cn_counts, ambig_sum_total),
-                p.coauthor_boost_cap,
-            )
-            venue_boost = min(max(cslr_tool, p.venue_boost_floor), p.venue_boost_cap)
-            prior = min(p.threshold, p.empty_vec_prior_cap)
-            if ids1.size == 0 or ids2.size == 0:
-                base = prior
-                gate = True
-            else:
-                base = p.w_content * content + p.w_taxonomy * taxonomy + p.w_jw * jw
-                if p.use_simi_lower_bound and 0.0 < base < prior:
-                    base = prior
-                gate = ic_sum >= gate_thres
-            score_val = base * venue_boost * boost * ydisc if gate else 0.0
-            return (
-                bool(mergeable), reason, float(cslr_co), float(cslr_tool),
-                float(jw), float(content), float(taxonomy), float(ydisc),
-                float(boost), ic_sum, bool(gate), float(score_val),
-            )
-
-        score_names = [f.name for f in SCORE_SCHEMA.fields]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            results = [
-                score(c1, c2, f1, f2)
-                for c1, c2, f1, f2 in zip(
-                    pdf["conv_id1"], pdf["conv_id2"], pdf["f1"], pdf["f2"]
-                )
-            ]
-            res = pd.DataFrame(results, columns=score_names)
-            yield pd.concat([pdf[pass_cols].reset_index(drop=True), res], axis=1)
-
-    return pairs_with_prep.mapInPandas(scorer, schema=out_schema)
 
 
 def _lgamma1_u(a):
@@ -1183,23 +857,18 @@ def _coauthor_channel_batched(
 def _score_group_vectorized(
     pairs_pdf: pd.DataFrame,
     prep_pdf: pd.DataFrame,
-    p: ScoringParams,
-    ambig: dict,
-    cn_counts: dict,
-    ambig_sum_total: float,
-    tool_simi_map: dict,
-    score_names: list[str],
+    sv: dict,
     needed_only: bool = False,
-    n_docs: float = 0.0,
-    max_df: float = 0.0,
 ) -> pd.DataFrame:
-    """Score one cogroup's pairs, vectorized.
+    """Score one cogroup's pairs, vectorized. ``sv`` is the broadcast
+    value of ``_broadcast_side``.
 
     With ``needed_only=True`` the per-unique-pair channels (tool CSLR,
     Jaro-Winkler) are computed only for pairs where they can be observed
     downstream — evidence-gate passers (score ≠ 0 requires the gate) and
-    stage-1 mergeable pairs. Callers that emit every row (the parity-tested
-    full scorers) keep the default and get all channels everywhere.
+    stage-1 mergeable pairs. Callers that emit every row
+    (``score_pairs_grouped``) keep the default and get all channels
+    everywhere.
 
     Channel-for-channel identical to ``score_one_pair`` (the unit-test
     oracle); the bulk channels run as numpy/BLAS matrix products instead of
@@ -1216,12 +885,19 @@ def _score_group_vectorized(
       domains of the per-pair path — then gathered;
     * stage-1 coauthor logic (subset / evidence-error / cslr-odds,
       NLPUtil.pm:3904-3941, 4173-4342) + shared-coauthor boost + coauthor
-      CSLR: per-pair Python, but ONLY for pairs that share ≥1 coauthor —
-      membership detected by an indicator gram; pairs sharing none have
-      mergeable=False, cslr_co=0, boost=1 by definition.
+      CSLR: batched over shared-key joins (``_coauthor_channel_batched``);
+      pairs sharing no coauthor have mergeable=False, cslr_co=0, boost=1
+      by definition.
     """
     import numpy as np
 
+    p: ScoringParams = sv["params"]
+    ambig = sv["ambig"]
+    cn_counts = sv["cn_counts"]
+    ambig_sum_total = sv["ambig_sum_total"]
+    tool_simi_map = sv["tool_simi_map"]
+    n_docs = sv["n_docs"]
+    max_df = sv["max_df"]
     n = len(prep_pdf)
     P = len(pairs_pdf)
     expander = None
@@ -1471,40 +1147,31 @@ def _score_group_vectorized(
             "gate_passed": gate,
             "score": score,
         }
-    )[score_names]
+    )[SCORE_NAMES]
 
 
-def score_pairs_grouped(
-    spark: SparkSession,
-    pairs: DataFrame,
-    prep: DataFrame,
-    side: SideTables,
-    params: ScoringParams | None = None,
-    target_pairs_per_group: int = 10_000,
-    max_buckets: int = 32,
-) -> DataFrame:
-    """Cogrouped scorer: pairs and prepared features are cogrouped on a
-    salted bucket grid and scored with ``applyInPandas``.
+# Grid geometry of the two kernels. Module constants, not options: tests
+# shrink them to force salting on small fixtures.
+# score_pairs_grouped: a block of P candidate pairs splits into
+# ceil(sqrt(2·P / TARGET_PAIRS_PER_GROUP)) buckets, at most MAX_BUCKETS.
+TARGET_PAIRS_PER_GROUP = 10_000
+MAX_BUCKETS = 32
+# score_blocks_exhaustive: a block of n conversations splits into
+# ceil(n / BUCKET_ROWS) buckets. It (and the pipeline, on the big-block
+# route) keeps only rows that are stage-1 mergeable or score ≥
+# EMIT_FLOOR_FRAC × threshold: CC uses the full threshold, so edges are
+# unchanged; the margin rides along for diagnostics.
+BUCKET_ROWS = 96
+EMIT_FLOOR_FRAC = 0.8
 
-    Why not the equi-join + struct shipment of ``score_pairs_fast``: a
-    conversation participates in ~tens of candidate pairs, so joining its
-    feature struct onto every pair Arrow-ships (and converts to Python
-    dicts) each conversation's vectors once PER PAIR — measured ~3x the
-    actual scoring compute.
+SCORE_NAMES = [f.name for f in SCORE_SCHEMA.fields]
 
-    Grid salting (the 'wei wang' skew duty, SURVEY.md §4): per block,
-    conversations hash into ``nb = ceil(sqrt(2·pairs/target))`` buckets;
-    a pair lands in grid cell (min(b1,b2), max(b1,b2)) and a conversation's
-    features ship to the nb cells its bucket touches. A hot block's O(n²)
-    pair workload spreads over nb(nb+1)/2 ≈ pairs/target tasks while its
-    features replicate only nb ≈ sqrt(pairs/target) times — versus
-    pairs/target times under naive per-cell replication — and each cell
-    decodes only its two buckets' features, not the whole block. Cold
-    blocks (nb=1) ship exactly one copy."""
-    import numpy as np
 
-    params = params or ScoringParams()
-    bc = spark.sparkContext.broadcast(
+def _broadcast_side(spark: SparkSession, side: SideTables, params: ScoringParams):
+    """Broadcast what ``_score_group_vectorized`` reads in the Python
+    worker. idf, cat_ic and the name-part tables are not in it:
+    ``prepare_scoring`` already folded them into the prepared rows."""
+    return spark.sparkContext.broadcast(
         {
             "ambig": side.ambig,
             "cn_counts": side.cn_counts,
@@ -1516,6 +1183,51 @@ def score_pairs_grouped(
         }
     )
 
+
+def _replicate_to_grid(feats: DataFrame, nb) -> DataFrame:
+    """Salted 2-D bucket grid: each row hashes into bucket ``b`` of its
+    block's ``nb`` and replicates to the ``nb`` cells
+    (least(b, j), greatest(b, j)), j in [0, nb), its bucket touches — so
+    every unordered bucket pair of a block meets in exactly one bi ≤ bj
+    cell. Adds columns b, bi, bj."""
+    return (
+        feats.withColumn("b", F.pmod(F.xxhash64("conv_id"), nb).cast("int"))
+        .withColumn("j", F.explode(F.sequence(F.lit(0), nb - 1)))
+        .withColumn("bi", F.least(F.col("b"), F.col("j")))
+        .withColumn("bj", F.greatest(F.col("b"), F.col("j")))
+        .drop("j")
+    )
+
+
+def score_pairs_grouped(
+    spark: SparkSession,
+    pairs: DataFrame,
+    prep: DataFrame,
+    side: SideTables,
+    params: ScoringParams | None = None,
+) -> DataFrame:
+    """Cogrouped scorer: pairs and prepared features are cogrouped on a
+    salted bucket grid and scored with ``applyInPandas``.
+
+    Pairs carry only their keys. A conversation takes part in ~tens of
+    candidate pairs, so joining its prepared struct onto every pair would
+    Arrow-ship (and decode to Python) its vectors once PER PAIR — measured
+    ~3x the actual scoring compute.
+
+    Grid salting (the 'wei wang' skew duty, SURVEY.md §4): per block,
+    conversations hash into ``nb = ceil(sqrt(2·pairs/TARGET_PAIRS_PER_GROUP))``
+    buckets; a pair lands in grid cell (min(b1,b2), max(b1,b2)) and a
+    conversation's features ship to the nb cells its bucket touches
+    (``_replicate_to_grid``). A hot block's O(n²) pair workload spreads over
+    nb(nb+1)/2 ≈ pairs/target tasks while its features replicate only
+    nb ≈ sqrt(pairs/target) times — versus pairs/target times under naive
+    per-cell replication — and each cell decodes only its two buckets'
+    features, not the whole block. Cold blocks (nb=1) ship exactly one
+    copy. Every input pair comes back once, with all SCORE_SCHEMA
+    channels."""
+    params = params or ScoringParams()
+    bc = _broadcast_side(spark, side, params)
+
     # `pairs` feeds two consumers (the per-block bucket counts and the
     # salted scoring shuffle); without a persist the whole blocking DAG —
     # explode, df-cap join, self-join, aggregate — runs twice per action.
@@ -1524,11 +1236,11 @@ def score_pairs_grouped(
     counts = counts.select(
         "block_key",
         F.least(
-            F.lit(max_buckets),
+            F.lit(MAX_BUCKETS),
             F.greatest(
                 F.lit(1),
                 F.ceil(
-                    F.sqrt(2.0 * F.col("n_pairs") / F.lit(target_pairs_per_group))
+                    F.sqrt(2.0 * F.col("n_pairs") / F.lit(TARGET_PAIRS_PER_GROUP))
                 ),
             ),
         )
@@ -1543,35 +1255,17 @@ def score_pairs_grouped(
         .withColumn("bj", F.greatest(b1, b2))
         .drop("nb")
     )
-    b = F.pmod(F.xxhash64("conv_id"), F.col("nb")).cast("int")
-    pr2 = (
-        prep.join(F.broadcast(counts), "block_key")
-        .withColumn("b", b)
-        .withColumn("j", F.explode(F.sequence(F.lit(0), F.col("nb") - 1)))
-        .withColumn("bi", F.least(F.col("b"), F.col("j")))
-        .withColumn("bj", F.greatest(F.col("b"), F.col("j")))
-        .drop("nb", "b", "j")
-    )
+    pr2 = _replicate_to_grid(
+        prep.join(F.broadcast(counts), "block_key"), F.col("nb")
+    ).drop("nb", "b")
 
-    pair_cols = [c for c in pairs.columns]
-    out_schema = T.StructType(
-        [f for f in pairs.schema.fields] + list(SCORE_SCHEMA.fields)
-    )
-    score_names = [f.name for f in SCORE_SCHEMA.fields]
+    pair_cols = pairs.columns
+    out_schema = T.StructType(pairs.schema.fields + SCORE_SCHEMA.fields)
 
     def fn(pairs_pdf: pd.DataFrame, prep_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pairs_pdf) == 0:
-            return pd.DataFrame(columns=pair_cols + score_names)
-        sv = bc.value
-        p: ScoringParams = sv["params"]
-        ambig = sv["ambig"]
-        cn_counts = sv["cn_counts"]
-        ambig_sum_total = sv["ambig_sum_total"]
-        res = _score_group_vectorized(
-            pairs_pdf, prep_pdf, p, ambig, cn_counts, ambig_sum_total,
-            sv["tool_simi_map"], score_names,
-            n_docs=sv["n_docs"], max_df=sv["max_df"],
-        )
+            return pd.DataFrame(columns=pair_cols + SCORE_NAMES)
+        res = _score_group_vectorized(pairs_pdf, prep_pdf, bc.value)
         return pd.concat(
             [pairs_pdf[pair_cols].reset_index(drop=True), res], axis=1
         )
@@ -1579,9 +1273,7 @@ def score_pairs_grouped(
     grouped = p2.groupBy("block_key", "bi", "bj").cogroup(
         pr2.groupBy("block_key", "bi", "bj")
     )
-    return grouped.applyInPandas(
-        lambda left, right: fn(left, right), schema=out_schema
-    )
+    return grouped.applyInPandas(fn, schema=out_schema)
 
 
 def score_blocks_exhaustive(
@@ -1590,8 +1282,6 @@ def score_blocks_exhaustive(
     side: SideTables,
     params: ScoringParams | None = None,
     small_block_size: int = 256,
-    bucket_rows: int = 96,
-    emit_floor_frac: float = 0.8,
     sizes: DataFrame | None = None,
 ) -> DataFrame:
     """All-pairs scoring for small blocks WITHOUT materializing a pair table.
@@ -1601,45 +1291,27 @@ def score_blocks_exhaustive(
     ``small_block_size`` conversations that is O(cap²) bounded work. Shipping
     an explicit pair row per candidate through a JVM join + Arrow round-trip
     costs more than the scoring itself, so here the *prepared feature rows*
-    are salted into a bucket grid (nb = ceil(n / bucket_rows) buckets per
-    block; a row replicates to the nb cells its bucket touches — the same
-    'wei wang' skew geometry as all_pairs_salted) and the Python worker
-    enumerates its cell's pairs directly: triu within a bucket-diagonal
-    cell, full cross product otherwise.
+    are salted into a bucket grid (nb = ceil(n / BUCKET_ROWS) buckets per
+    block, ``_replicate_to_grid`` — the same 'wei wang' skew geometry as
+    ``score_pairs_grouped``) and the Python worker enumerates its cell's
+    pairs directly: triu within a bucket-diagonal cell, full cross product
+    otherwise.
 
     Only rows that can matter downstream are emitted: stage-1 mergeable or
-    score ≥ emit_floor_frac × threshold (the CC edge filter uses the full
-    threshold, so edges are identical to scoring everything; the sub-floor
-    margin rides along for diagnostics). Output schema: (block_key,
-    conv_id1, conv_id2) + SCORE_SCHEMA.
+    score ≥ EMIT_FLOOR_FRAC × threshold. Output schema: (block_key,
+    conv_id1, conv_id2) + SCORE_SCHEMA, with conv_id1 < conv_id2.
     """
     import numpy as np
 
     params = params or ScoringParams()
-    bc = spark.sparkContext.broadcast(
-        {
-            "ambig": side.ambig,
-            "cn_counts": side.cn_counts,
-            "ambig_sum_total": side.ambig_sum_total,
-            "tool_simi_map": side.tool_simi_map,
-            "n_docs": side.n_docs,
-            "max_df": side.max_df,
-            "params": params,
-        }
-    )
+    bc = _broadcast_side(spark, side, params)
     if sizes is None:
         sizes = prep.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
     feats = prep.join(
         F.broadcast(sizes.where(F.col("n") <= small_block_size)), "block_key"
     )
-    nb = F.ceil(F.col("n") / F.lit(bucket_rows)).cast("int")
-    feats = (
-        feats.withColumn("b", F.pmod(F.xxhash64("conv_id"), nb).cast("int"))
-        .withColumn("j", F.explode(F.sequence(F.lit(0), nb - 1)))
-        .withColumn("bi", F.least(F.col("b"), F.col("j")))
-        .withColumn("bj", F.greatest(F.col("b"), F.col("j")))
-        .drop("n", "j")
-    )
+    nb = F.ceil(F.col("n") / F.lit(BUCKET_ROWS)).cast("int")
+    feats = _replicate_to_grid(feats, nb).drop("n")
 
     out_schema = T.StructType(
         [
@@ -1649,8 +1321,7 @@ def score_blocks_exhaustive(
         ]
         + list(SCORE_SCHEMA.fields)
     )
-    score_names = [f.name for f in SCORE_SCHEMA.fields]
-    emit_floor = emit_floor_frac * params.threshold
+    emit_floor = EMIT_FLOOR_FRAC * params.threshold
 
     def fn(key, prep_pdf: pd.DataFrame) -> pd.DataFrame:
         block_key, bi, bj = key[0], int(key[1]), int(key[2])
@@ -1674,13 +1345,7 @@ def score_blocks_exhaustive(
         c1, c2 = np.where(swap, c2, c1), np.where(swap, c1, c2)
         pairs_pdf = pd.DataFrame({"conv_id1": c1, "conv_id2": c2})
 
-        sv = bc.value
-        p: ScoringParams = sv["params"]
-        res = _score_group_vectorized(
-            pairs_pdf, prep_pdf, p, sv["ambig"], sv["cn_counts"],
-            sv["ambig_sum_total"], sv["tool_simi_map"], score_names,
-            needed_only=True, n_docs=sv["n_docs"], max_df=sv["max_df"],
-        )
+        res = _score_group_vectorized(pairs_pdf, prep_pdf, bc.value, needed_only=True)
         keep = res["stage1_mergeable"].to_numpy() | (
             res["score"].to_numpy() >= emit_floor
         )

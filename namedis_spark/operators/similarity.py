@@ -104,33 +104,15 @@ def adaptive_planes_expr(count_expr: str) -> str:
     )
 
 
-_COUNT_MEMO: dict[tuple[int, int], int] = {}
-
-
-def _corpus_count(df: DataFrame) -> int:
-    """Memoized ``df.count()`` keyed by (session, semantic hash): the
-    adaptive-plane scalar is a pure function of the corpus, so one count
-    job per session suffices. Bounded: the memo holds ints only and is
-    cleared with the session-scoped caches (``caching.release_all`` keeps
-    DataFrame handles; this keeps none)."""
-    try:
-        key = (id(df.sparkSession), df.semanticHash())
-    except Exception:  # semanticHash unavailable (e.g. connect) — no memo
-        return df.count()
-    if key not in _COUNT_MEMO:
-        if len(_COUNT_MEMO) > 256:
-            _COUNT_MEMO.clear()
-        _COUNT_MEMO[key] = df.count()
-    return _COUNT_MEMO[key]
-
-
 _PROBE_MEMO: dict[tuple[int, int], tuple[int, int, int]] = {}
 
 
 def _corpus_probe(df: DataFrame, col: str = "embedding") -> tuple[int, int, int]:
     """Memoized (n_rows, min_dim, max_dim) of the corpus in ONE tiny
-    aggregate job (same memo discipline as ``_corpus_count``). Feeds the
-    adaptive plane count and the literal-plane emission below."""
+    aggregate job, keyed by (session, semantic plan hash) and bounded at
+    256 entries: the values are pure functions of the corpus, so one probe
+    per session suffices. Feeds the adaptive plane count and the
+    literal-plane emission below."""
     def probe() -> tuple[int, int, int]:
         r = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -393,40 +375,6 @@ def lsh_topk(
         .where(F.col("rk") <= k)
         .select("query_id", "cand_id", "cosine", "rk")
     )
-
-
-def hyperplane_buckets(
-    embeddings: DataFrame, n_planes: int = 8, seed: int = 7, dim: int | None = None
-) -> DataFrame:
-    """Single-table hyperplane signature (tbl = 0 of the multi-table
-    scheme) — kept for callers that bucket without OR-amplification.
-    Uses the literal-plane emission (see ``table_buckets``)."""
-    cnt, lo, hi = _corpus_probe(embeddings)
-    sig = _sig_literal_expr(1, n_planes, hi, uniform=(lo == hi), seed=seed)
-    return embeddings.select(
-        "vec_id",
-        "embedding",
-        F.expr(f"element_at({sig}, 1)").alias("bucket"),
-    )
-
-
-def lsh_ann_pairs(
-    embeddings: DataFrame, n_planes: int = 8, min_cosine: float = 0.8
-) -> DataFrame:
-    """Single-table ANN near-neighbor pairs: bucket join + exact cosine
-    verification of same-bucket pairs only. Prefer `lsh_candidates` +
-    `exact_cosine` (multi-table OR-amplification) for recall-sensitive
-    near-dup detection."""
-    b = hyperplane_buckets(embeddings, n_planes)
-    a = b.select("bucket", F.col("vec_id").alias("vec_id1"))
-    c = b.select("bucket", F.col("vec_id").alias("vec_id2"))
-    pairs = (
-        a.join(c, "bucket")
-        .where(F.col("vec_id1") < F.col("vec_id2"))
-        .select("vec_id1", "vec_id2")
-        .distinct()
-    )
-    return exact_cosine(pairs, embeddings).where(F.col("cosine") >= min_cosine)
 
 
 # ---------------------------------------------------------------------------

@@ -19,17 +19,19 @@ re-enters at the last committed boundary and reruns only what follows it:
 - ``features`` committed: the side tables and scoring rerun from it.
 
 A committed snapshot is never rewritten by a resume. Every run records an
-input fingerprint (transcript files or plan hash, schema, scoring params,
-ambiguity rounds, seeds on/off) in the store's ``manifest.json``; a resume
-whose fingerprint differs, or a store holding snapshots but no manifest, is
-refused with ``ResumeMismatchError`` instead of silently mixing inputs. A
-fresh run clears the stage snapshots it finds, so no stale round can be
-resumed later.
+input fingerprint (transcript files with their canonical plan hash, or the
+in-process plan hash; schema, scoring params, ambiguity rounds, seeds
+on/off) in the store's ``manifest.json``; a resume whose fingerprint
+differs, or a store holding snapshots but no manifest, is refused with
+``ResumeMismatchError`` instead of silently mixing inputs. A fresh run
+clears the stage snapshots it finds, so no stale round can be resumed
+later.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import hashlib
 import json
 from dataclasses import dataclass
 
@@ -43,8 +45,9 @@ from namedis_spark.operators.cluster import assignments_from_edges
 from namedis_spark.operators.evaluate import macro_micro, pairwise_prf
 from namedis_spark.operators.features import conversation_features
 from namedis_spark.operators.scoring import (
-    SCORE_SCHEMA,
+    EMIT_FLOOR_FRAC,
     ScoringParams,
+    SideTables,
     edges_above_threshold,
     prepare_scoring,
     score_blocks_exhaustive,
@@ -81,20 +84,27 @@ def input_fingerprint(
     """What a run's snapshots are computed from, as stored in the manifest.
 
     File-backed transcripts are identified by (path, size, mtime) of the
-    files their plan reads; other inputs by the plan's ``semanticHash()``,
-    which holds only within one driver process. Filters applied on top of
-    a file scan are not part of the fingerprint. Runs no Spark job: the
-    file list comes from the already-resolved file index and the stats
-    from the Hadoop filesystem client."""
+    files their plan reads plus the SHA-256 of the canonicalized analyzed
+    plan, so a filter or projection on top of the file scan changes the
+    fingerprint; both are stable across driver processes. Other inputs are
+    identified by the plan's ``semanticHash()``, which holds only within
+    one driver process. Runs no Spark job: the file list comes from the
+    already-resolved file index, the stats from the Hadoop filesystem
+    client and the plan from the analyzer."""
     files = sorted(transcripts.inputFiles())
     if files:
         sc = transcripts.sparkSession.sparkContext
         conf = sc._jsc.hadoopConfiguration()
-        source = []
+        stats = []
         for f in files:
             path = sc._jvm.org.apache.hadoop.fs.Path(f)
             st = path.getFileSystem(conf).getFileStatus(path)
-            source.append([f, st.getLen(), st.getModificationTime()])
+            stats.append([f, st.getLen(), st.getModificationTime()])
+        plan = transcripts._jdf.queryExecution().analyzed().canonicalized().toString()
+        source = {
+            "files": stats,
+            "plan_sha256": hashlib.sha256(plan.encode()).hexdigest(),
+        }
     else:
         source = transcripts.semanticHash()
     fp = {
@@ -422,23 +432,9 @@ def _score(
     hits.unpersist()
     cn.unpersist()
 
-    from namedis_spark.operators.scoring import SideTables
-
-    side = SideTables()
-    side.ambig, side.cn_counts, side.ambig_sum_total = pruned
-    side.idf, side.cat_ic = corpus.idf_ic_from_stats(term_rows, int(n_convs))
-    side.n_docs = float(n_convs)
-    if side.idf:
-        import math as _math
-
-        side.max_df = side.n_docs * _math.exp(-min(side.idf.values()))
-    tool_map: dict[str, list[tuple[str, float]]] = {}
-    for r in ts_rows:
-        tool_map.setdefault(r["tool1"], []).append((r["tool2"], float(r["linreg_simi"])))
-    for v in tool_map.values():
-        v.sort(key=lambda kv: (-kv[1], kv[0]))
-    side.tool_simi_map = tool_map
-    side.surname_lp, side.given_lp = name_part_lps
+    side = SideTables.from_stats(
+        pruned, term_rows, int(n_convs), ts_rows, name_part_lps
+    )
     tick("side_tables")
 
     # -- blocking + scoring (stage snapshot) ------------------------------
@@ -449,15 +445,11 @@ def _score(
     key_cols = ["block_key", "conv_id1", "conv_id2"]
     # The clustering path reads ONLY (stage1_mergeable, score) — the 12
     # diagnostic component columns are ~4/5 of the row and are only read
-    # by verification queries, which invoke the scorers directly. Keep
-    # them off the scored-pair checkpoint (union + localCheckpoint +
-    # parquet snapshot) unless explicitly requested: at 10^12 turns the
+    # by verification queries, which invoke the scorers directly. Keeping
+    # them off the scored-pair checkpoint matters: at 10^12 turns the
     # scored-pair table is the pipeline's biggest materialized
     # intermediate.
-    if os.environ.get("SPARK_GRAFT_SCORE_COMPONENTS"):
-        score_cols = [f.name for f in SCORE_SCHEMA.fields]
-    else:
-        score_cols = ["stage1_mergeable", "score"]
+    score_cols = ["stage1_mergeable", "score"]
     small_scored = score_blocks_exhaustive(
         spark,
         prep,
@@ -468,7 +460,7 @@ def _score(
     )
     big_prep = prep.join(F.broadcast(big_keys), "block_key")
     big_scored = score_pairs_grouped(spark, pairs, big_prep, side, params)
-    emit_floor = 0.8 * params.threshold
+    emit_floor = EMIT_FLOOR_FRAC * params.threshold
     big_scored = big_scored.where(
         F.col("stage1_mergeable") | (F.col("score") >= emit_floor)
     )

@@ -1682,7 +1682,7 @@ def _cslr_scored_pairs(spark, sf_dir, log_fn, out_col: str = "log_cslr"):
     )
     pairs = a.join(b, "block_key").where(F.col("conv_id1") < F.col("conv_id2"))
 
-    def score_pairs(batches):
+    def score_batches(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1699,7 +1699,7 @@ def _cslr_scored_pairs(spark, sf_dir, log_fn, out_col: str = "log_cslr"):
                 }
             )
 
-    big_out = pairs.mapInPandas(score_pairs, schema=schema)
+    big_out = pairs.mapInPandas(score_batches, schema=schema)
     return small_out.unionByName(big_out)
 
 
@@ -3263,7 +3263,7 @@ def name_reverse_votes(spark, sf_dir):
     # The per-part counting runs DISTRIBUTED — the syllable-pair gate is
     # pushed into the query and only the aggregated (part, role, count)
     # table is collected, bounded by 2× the 407-syllable vocabulary, never
-    # O(#conversations) (mirrors corpus.name_part_logprobs).
+    # O(#conversations) (mirrors corpus.term_and_name_stats).
     import math as _math
 
     from namedis_spark.functions.text import _SYLLABLES

@@ -23,9 +23,9 @@ _DEFAULTS = {
     # AQE coalescing keeps parallelismFirst=true (the default): several of
     # our small-byte shuffles are CPU-heavy (feature-map aggregation,
     # pair scoring), so coalescing them down to the 64MB byte target would
-    # serialize them. The Python scoring stage additionally pins its own
-    # partitioning explicitly (see score_pairs_fast) because its cost is
-    # Python CPU and it must also break hot-block skew.
+    # serialize them. The Python scoring kernels additionally group by
+    # their own salted bucket grid (see scoring._replicate_to_grid) because
+    # their cost is Python CPU and they must also break hot-block skew.
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # AQE's coalescing targets bytes, but our hot stages are Arrow-batched
     # Python scoring where CPU-per-byte is ~10-30x a JVM stage's: a 64MB

@@ -134,7 +134,7 @@ def test_simhash_identical_for_same_bag(spark, docs):
 
 
 def test_brute_force_topk_and_lsh_ann(spark):
-    from namedis_spark.operators.similarity import brute_force_topk, lsh_ann_pairs
+    from namedis_spark.operators.similarity import brute_force_topk, lsh_topk
 
     import numpy as np
 
@@ -147,11 +147,11 @@ def test_brute_force_topk_and_lsh_ann(spark):
     topk = brute_force_topk(emb, emb.where("vec_id = 0"), k=3).collect()
     assert topk[0]["cand_id"] == 1 and topk[0]["rk"] == 1
 
-    ann = {
-        (r["vec_id1"], r["vec_id2"]): r["cosine"]
-        for r in lsh_ann_pairs(emb, n_planes=4, min_cosine=0.99).collect()
-    }
-    assert (0, 1) in ann  # near-identical vectors share all hyperplane signs
+    # near-identical vectors share all hyperplane signs, so the bucketed
+    # ANN path finds vec 1 as vec 0's nearest neighbour too
+    ann = lsh_topk(emb, emb.where("vec_id = 0"), k=3).collect()
+    ann = {r["rk"]: r["cand_id"] for r in ann}
+    assert ann[1] == 1
 
 
 @pytest.fixture(scope="module")
@@ -525,21 +525,3 @@ def test_embedding_lsh_bucket_cap(spark):
     }
     assert not any(x < 12 and y < 12 for x, y in cands)
     assert (100, 101) in cands
-
-
-def test_corpus_count_memoized(spark, emb100):
-    """The adaptive-plane corpus count must be computed once per
-    (session, semantic plan) — repeated LSH invocations over the same
-    corpus reuse the scalar instead of re-scanning (r4 ADVICE /
-    embedding_cosine_dups forensics)."""
-    from namedis_spark.operators import similarity as S
-
-    S._COUNT_MEMO.clear()
-    n1 = S._corpus_count(emb100)
-    assert n1 == emb100.count()
-    assert len(S._COUNT_MEMO) == 1
-    # poison the memo: a second call must hit it, not recount
-    key = next(iter(S._COUNT_MEMO))
-    S._COUNT_MEMO[key] = 12345
-    assert S._corpus_count(emb100) == 12345
-    S._COUNT_MEMO.clear()

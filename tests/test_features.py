@@ -103,29 +103,6 @@ def test_feature_vectors_match_pandas_oracle(feats):
         assert row["n_turns"] == len(conv)
 
 
-def test_key_ambiguity_driver_matches_dataframe(spark, data):
-    """The driver-side fixed point (key_ambiguity_rows) must reproduce the
-    distributed DataFrame job row-for-row (same seed, update rule, cap,
-    rounding)."""
-    from namedis_spark.operators import corpus
-    from namedis_spark.operators.features import conversation_features
-
-    t, _, _ = data
-    f = conversation_features(t)
-    want = {
-        r["name"]: (r["occurrence"], r["ambig"])
-        for r in corpus.key_ambiguity(f, rounds=3).collect()
-    }
-    got = {
-        r["name"]: (r["occurrence"], r["ambig"])
-        for r in corpus.key_ambiguity_rows(f, rounds=3)
-    }
-    assert set(want) == set(got)
-    for k, (occ, amb) in want.items():
-        assert got[k][0] == occ, k
-        assert abs(got[k][1] - amb) <= 2e-6, (k, got[k][1], amb)
-
-
 def test_key_ambiguity_pdf_bounded(spark, data):
     """The bounded driver-side path must match the distributed loop under
     the bound and decline gracefully (None -> distributed fallback) above

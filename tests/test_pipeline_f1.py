@@ -4,8 +4,11 @@ every checkpoint boundary and the refused resume on changed inputs."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 
@@ -14,6 +17,7 @@ import pyspark.sql.functions as F
 from namedis_spark import pipeline
 from namedis_spark.datagen import generate_transcripts
 from namedis_spark.operators.scoring import ScoringParams
+from namedis_spark.sources.checkpoint import CheckpointStore
 
 
 @pytest.fixture(scope="module")
@@ -178,9 +182,9 @@ def test_resume_of_committed_run_runs_no_spark_job(spark, fixture_data, full_run
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("change", ["transcripts", "threshold", "seeds"])
+@pytest.mark.parametrize("change", ["transcripts", "threshold", "seeds", "filtered"])
 def test_resume_with_changed_inputs_is_refused(
-    spark, fixture_data, fixture_seeds, full_runs, change
+    spark, fixture_data, fixture_seeds, full_runs, change, tmp_path
 ):
     t, _ = fixture_data
     ckpt = full_runs["unseeded"][0]
@@ -189,9 +193,21 @@ def test_resume_with_changed_inputs_is_refused(
         t = generate_transcripts(spark, n_blocks=4, seed=43, hot_blocks=0)[0]
     elif change == "threshold":
         kw["params"] = ScoringParams(threshold=0.7)
-    else:
+    elif change == "seeds":
         kw["seeds"] = fixture_seeds
-    field = {"transcripts": "transcripts", "threshold": "params", "seeds": "seeded"}[change]
+    else:
+        # a store fingerprinted on parquet transcripts, resumed on the same
+        # files behind a filter: the file list matches, the plan does not
+        path = str(tmp_path / "t")
+        t.write.parquet(path)
+        ckpt = str(tmp_path / "ckpt")
+        CheckpointStore(spark, ckpt).write_manifest(
+            pipeline.input_fingerprint(
+                spark.read.parquet(path), ScoringParams(), 3, False
+            )
+        )
+        t = spark.read.parquet(path).where(F.col("turn_idx") > 0)
+    field = {"threshold": "params", "seeds": "seeded"}.get(change, "transcripts")
     with pytest.raises(pipeline.ResumeMismatchError, match=f"manifest.json in {field}"):
         pipeline.run(spark, t, ckpt, resume=True, **kw)
 
@@ -221,6 +237,39 @@ def test_file_backed_fingerprint_tracks_files(spark, fixture_data, tmp_path):
     assert first["transcripts"] and first == fp()
     t.write.mode("overwrite").parquet(path)
     assert fp()["transcripts"] != first["transcripts"]
+
+
+def test_file_backed_fingerprint_is_stable_across_processes(
+    spark, fixture_data, tmp_path
+):
+    """The same parquet read in a new driver process fingerprints the same,
+    so a resume from another process is accepted."""
+    t, _ = fixture_data
+    path = str(tmp_path / "t")
+    t.write.parquet(path)
+    here = pipeline.input_fingerprint(
+        spark.read.parquet(path), ScoringParams(), 3, False
+    )
+    code = (
+        "import json, sys\n"
+        "from namedis_spark import pipeline\n"
+        "from namedis_spark.operators.scoring import ScoringParams\n"
+        "from namedis_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "fp = pipeline.input_fingerprint(\n"
+        "    spark.read.parquet(sys.argv[1]), ScoringParams(), 3, False)\n"
+        "print('FP=' + json.dumps(fp))\n"
+        "spark.stop()\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    out = subprocess.run(
+        [sys.executable, "-c", code, path],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    line = next(x for x in out.stdout.splitlines() if x.startswith("FP="))
+    assert json.loads(line[3:]) == here
 
 
 def test_pipeline_determinism_two_runs(spark, fixture_data, full_runs, tmp_path_factory):
