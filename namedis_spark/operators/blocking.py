@@ -14,8 +14,11 @@ candidate pairs from two evidence sources, unioned and deduped:
 2. **shared-rare-term equi-join** — stage-2 recall: terms with within-block
    df ≤ ``max_evidence_df``.
 
-Small blocks need no pair table: ``scoring.score_blocks_exhaustive`` scores
-all their pairs inside the Python worker over a salted bucket grid.
+Small blocks need no pair table. ``block_pair_grid``, this module's one
+within-block all-pairs primitive, salts their rows into a 2-D bucket grid
+(Hyper Dimension Shuffle, VLDB 2019) and enumerates each pair once behind
+one Arrow-batched Python boundary. ``scoring.score_blocks_exhaustive`` and
+the registry's CSLR/Jaccard/Jaro-Winkler pair queries call it.
 
 At 10^12 turns the evidence joins are the scale path: pair count grows with
 Σ df² per evidence key (bounded by the df cap), not with block size².
@@ -23,8 +26,16 @@ At 10^12 turns the evidence joins are the scale path: pair count grows with
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+# Rows per block_pair_grid bucket. A module constant, not an option: tests
+# shrink it to force cross-bucket cells on small fixtures.
+BUCKET_ROWS = 96
 
 
 def _canonical_pairs(df: DataFrame) -> DataFrame:
@@ -72,3 +83,62 @@ def evidence_pairs(
         (F.col("n_shared_coauthors") >= min_shared_coauthors)
         | (F.col("n_shared_terms") >= 1)
     )
+
+
+def _replicate_to_grid(rows: DataFrame, nb, id_col: str) -> DataFrame:
+    """Salted 2-D bucket grid: each row hashes (on ``id_col``) into bucket
+    ``b`` of its block's ``nb`` and replicates to the ``nb`` cells
+    (least(b, j), greatest(b, j)), j in [0, nb), its bucket touches — so
+    every unordered bucket pair of a block meets in exactly one bi ≤ bj
+    cell. Adds columns b, bi, bj."""
+    return (
+        rows.withColumn("b", F.pmod(F.xxhash64(id_col), nb).cast("int"))
+        .withColumn("j", F.explode(F.sequence(F.lit(0), nb - 1)))
+        .withColumn("bi", F.least(F.col("b"), F.col("j")))
+        .withColumn("bj", F.greatest(F.col("b"), F.col("j")))
+        .drop("j")
+    )
+
+
+def block_pair_grid(
+    rows: DataFrame,
+    sizes: DataFrame,
+    id_col: str,
+    kernel: Callable[[pd.DataFrame, np.ndarray, np.ndarray], pd.DataFrame],
+    schema,
+) -> DataFrame:
+    """Every within-block pair of ``rows`` exactly once, scored by ``kernel``.
+
+    ``rows`` carry ``block_key`` and an ``id_col`` unique within the block;
+    ``sizes`` holds (block_key, n) for the blocks to enumerate. A block
+    hashes into ceil(n / BUCKET_ROWS) buckets (``_replicate_to_grid``) and
+    one ``groupBy(block_key, bi, bj).applyInPandas`` enumerates each cell:
+    ``triu`` inside a bucket, the cross product between buckets, swapped so
+    that id1 < id2. ``kernel(cell_rows, i1, i2)`` gets the cell's rows and
+    the pairs' positional indices and returns the ``schema`` columns after
+    ``block_key``; a cell without pairs returns an empty frame."""
+    nb = F.ceil(F.col("n") / F.lit(BUCKET_ROWS)).cast("int")
+    grid = _replicate_to_grid(
+        rows.join(F.broadcast(sizes), "block_key"), nb, id_col
+    ).drop("n")
+
+    def cell(key, pdf):
+        bi, bj = int(key[1]), int(key[2])
+        b = pdf["b"].to_numpy()
+        m1 = np.flatnonzero(b == bi)
+        if bi == bj:
+            ii, jj = np.triu_indices(m1.size, k=1)
+            i1, i2 = m1[ii], m1[jj]
+        else:
+            m2 = np.flatnonzero(b == bj)
+            i1, i2 = np.repeat(m1, m2.size), np.tile(m2, m1.size)
+        if i1.size == 0:
+            return pd.DataFrame()
+        ids = pdf[id_col].to_numpy()
+        swap = ids[i1] > ids[i2]
+        i1, i2 = np.where(swap, i2, i1), np.where(swap, i1, i2)
+        out = kernel(pdf, i1, i2)
+        out.insert(0, "block_key", key[0])
+        return out
+
+    return grid.groupBy("block_key", "bi", "bj").applyInPandas(cell, schema=schema)

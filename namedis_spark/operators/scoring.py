@@ -45,6 +45,7 @@ from namedis_spark.functions.core import (
     year_diff_discount,
     year_range_diff,
 )
+from namedis_spark.operators.blocking import _replicate_to_grid, block_pair_grid
 from namedis_spark.operators.corpus import idf_ic_from_stats
 
 _TERM_CAT_RE = re.compile(r"^term(\d+)$")
@@ -1150,18 +1151,15 @@ def _score_group_vectorized(
     )[SCORE_NAMES]
 
 
-# Grid geometry of the two kernels. Module constants, not options: tests
-# shrink them to force salting on small fixtures.
-# score_pairs_grouped: a block of P candidate pairs splits into
-# ceil(sqrt(2·P / TARGET_PAIRS_PER_GROUP)) buckets, at most MAX_BUCKETS.
+# Grid geometry of score_pairs_grouped (module constants, not options:
+# tests shrink them to force salting): a block of P candidate pairs splits
+# into ceil(sqrt(2·P / TARGET_PAIRS_PER_GROUP)) buckets, at most MAX_BUCKETS.
 TARGET_PAIRS_PER_GROUP = 10_000
 MAX_BUCKETS = 32
-# score_blocks_exhaustive: a block of n conversations splits into
-# ceil(n / BUCKET_ROWS) buckets. It (and the pipeline, on the big-block
-# route) keeps only rows that are stage-1 mergeable or score ≥
-# EMIT_FLOOR_FRAC × threshold: CC uses the full threshold, so edges are
-# unchanged; the margin rides along for diagnostics.
-BUCKET_ROWS = 96
+# score_blocks_exhaustive (and the pipeline, on the big-block route) keeps
+# only rows that are stage-1 mergeable or score ≥ EMIT_FLOOR_FRAC ×
+# threshold: CC uses the full threshold, so edges are unchanged; the
+# margin rides along for diagnostics.
 EMIT_FLOOR_FRAC = 0.8
 
 SCORE_NAMES = [f.name for f in SCORE_SCHEMA.fields]
@@ -1181,21 +1179,6 @@ def _broadcast_side(spark: SparkSession, side: SideTables, params: ScoringParams
             "max_df": side.max_df,
             "params": params,
         }
-    )
-
-
-def _replicate_to_grid(feats: DataFrame, nb) -> DataFrame:
-    """Salted 2-D bucket grid: each row hashes into bucket ``b`` of its
-    block's ``nb`` and replicates to the ``nb`` cells
-    (least(b, j), greatest(b, j)), j in [0, nb), its bucket touches — so
-    every unordered bucket pair of a block meets in exactly one bi ≤ bj
-    cell. Adds columns b, bi, bj."""
-    return (
-        feats.withColumn("b", F.pmod(F.xxhash64("conv_id"), nb).cast("int"))
-        .withColumn("j", F.explode(F.sequence(F.lit(0), nb - 1)))
-        .withColumn("bi", F.least(F.col("b"), F.col("j")))
-        .withColumn("bj", F.greatest(F.col("b"), F.col("j")))
-        .drop("j")
     )
 
 
@@ -1256,7 +1239,7 @@ def score_pairs_grouped(
         .drop("nb")
     )
     pr2 = _replicate_to_grid(
-        prep.join(F.broadcast(counts), "block_key"), F.col("nb")
+        prep.join(F.broadcast(counts), "block_key"), F.col("nb"), "conv_id"
     ).drop("nb", "b")
 
     pair_cols = pairs.columns
@@ -1290,71 +1273,40 @@ def score_blocks_exhaustive(
     (agglomerative, NLPUtil.pm:3810-3833); for blocks of ≤
     ``small_block_size`` conversations that is O(cap²) bounded work. Shipping
     an explicit pair row per candidate through a JVM join + Arrow round-trip
-    costs more than the scoring itself, so here the *prepared feature rows*
-    are salted into a bucket grid (nb = ceil(n / BUCKET_ROWS) buckets per
-    block, ``_replicate_to_grid`` — the same 'wei wang' skew geometry as
-    ``score_pairs_grouped``) and the Python worker enumerates its cell's
-    pairs directly: triu within a bucket-diagonal cell, full cross product
-    otherwise.
+    costs more than the scoring itself, so the *prepared feature rows* go
+    through ``blocking.block_pair_grid``, which salts them into a bucket
+    grid (the same 'wei wang' skew geometry as ``score_pairs_grouped``) and
+    hands each cell's canonical pairs to ``_score_group_vectorized``.
 
     Only rows that can matter downstream are emitted: stage-1 mergeable or
     score ≥ EMIT_FLOOR_FRAC × threshold. Output schema: (block_key,
     conv_id1, conv_id2) + SCORE_SCHEMA, with conv_id1 < conv_id2.
     """
-    import numpy as np
-
     params = params or ScoringParams()
     bc = _broadcast_side(spark, side, params)
     if sizes is None:
         sizes = prep.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
-    feats = prep.join(
-        F.broadcast(sizes.where(F.col("n") <= small_block_size)), "block_key"
-    )
-    nb = F.ceil(F.col("n") / F.lit(BUCKET_ROWS)).cast("int")
-    feats = _replicate_to_grid(feats, nb).drop("n")
-
     out_schema = T.StructType(
-        [
-            T.StructField("block_key", T.StringType()),
-            T.StructField("conv_id1", T.StringType()),
-            T.StructField("conv_id2", T.StringType()),
-        ]
-        + list(SCORE_SCHEMA.fields)
+        [T.StructField(c, T.StringType()) for c in ("block_key", "conv_id1", "conv_id2")]
+        + SCORE_SCHEMA.fields
     )
     emit_floor = EMIT_FLOOR_FRAC * params.threshold
 
-    def fn(key, prep_pdf: pd.DataFrame) -> pd.DataFrame:
-        block_key, bi, bj = key[0], int(key[1]), int(key[2])
-        cids = prep_pdf["conv_id"].to_numpy()
-        b = prep_pdf["b"].to_numpy()
-        if bi == bj:
-            members = np.nonzero(b == bi)[0]
-            ii, jj = np.triu_indices(members.size, k=1)
-            i1, i2 = members[ii], members[jj]
-        else:
-            m1 = np.nonzero(b == bi)[0]
-            m2 = np.nonzero(b == bj)[0]
-            i1 = np.repeat(m1, m2.size)
-            i2 = np.tile(m2, m1.size)
-        if i1.size == 0:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype="object") for f in out_schema.fields}
-            )
-        c1, c2 = cids[i1], cids[i2]
-        swap = c1 > c2
-        c1, c2 = np.where(swap, c2, c1), np.where(swap, c1, c2)
-        pairs_pdf = pd.DataFrame({"conv_id1": c1, "conv_id2": c2})
-
-        res = _score_group_vectorized(pairs_pdf, prep_pdf, bc.value, needed_only=True)
+    def kernel(rows: pd.DataFrame, i1, i2) -> pd.DataFrame:
+        cids = rows["conv_id"].to_numpy()
+        pairs_pdf = pd.DataFrame({"conv_id1": cids[i1], "conv_id2": cids[i2]})
+        res = _score_group_vectorized(pairs_pdf, rows, bc.value, needed_only=True)
         keep = res["stage1_mergeable"].to_numpy() | (
             res["score"].to_numpy() >= emit_floor
         )
-        out = pd.concat([pairs_pdf, res], axis=1).loc[keep]
-        out.insert(0, "block_key", block_key)
-        return out
+        return pd.concat([pairs_pdf, res], axis=1).loc[keep]
 
-    return feats.groupBy("block_key", "bi", "bj").applyInPandas(
-        fn, schema=out_schema
+    return block_pair_grid(
+        prep,
+        sizes.where(F.col("n") <= small_block_size),
+        "conv_id",
+        kernel,
+        out_schema,
     )
 
 

@@ -174,27 +174,29 @@ def _sig_literal_expr(
     n_tables: int, n_planes: int, dim: int, uniform: bool, seed: int,
     emb: str = "embedding",
 ) -> str:
-    """Array of the T bucket signatures from literal planes. ``uniform``
-    (all rows share ``dim``) takes the zip_with fast path; ragged corpora
-    fall back to an element_at walk bounded by each row's own size, which
-    matches ``sig_expr_spark``'s per-row-dim semantics exactly."""
+    """Array of the T bucket signatures from literal planes (bound once to
+    ``L``). An element_at walk bounded by each row's own size matches
+    ``sig_expr_spark`` exactly; ``uniform`` (the probe saw every row at
+    ``dim``) adds a zip_with fast path for rows of size ``dim`` only, so a
+    stale probe cannot null-pad a shorter row into a wrong bucket."""
     lit = _planes_literal(n_tables, n_planes, max(dim, 1), seed)
-    plane = f"element_at(element_at({lit}, t + 1), j + 1)"
+    plane = "element_at(element_at(L, t + 1), j + 1)"
+    dot = (
+        f"aggregate(sequence(0, size({emb}) - 1), 0d,"
+        f" (acc, d) -> acc + cast(element_at({emb}, d + 1) as double)"
+        f" * element_at({plane}, d + 1))"
+    )
     if uniform:
         dot = (
-            f"aggregate(zip_with(transform({emb}, x -> cast(x as double)),"
-            f" {plane}, (x, y) -> x * y), 0d, (acc, x) -> acc + x)"
-        )
-    else:
-        dot = (
-            f"aggregate(sequence(0, size({emb}) - 1), 0d,"
-            f" (acc, d) -> acc + cast(element_at({emb}, d + 1) as double)"
-            f" * element_at({plane}, d + 1))"
+            f"if(size({emb}) = {dim},"
+            f" aggregate(zip_with(transform({emb}, x -> cast(x as double)),"
+            f" {plane}, (x, y) -> x * y), 0d, (acc, x) -> acc + x), {dot})"
         )
     return (
-        f"transform(sequence(0, {n_tables - 1}), t -> aggregate("
+        f"element_at(transform(array({lit}), L ->"
+        f" transform(sequence(0, {n_tables - 1}), t -> aggregate("
         f"sequence(0, {n_planes - 1}), cast(0 as bigint),"
-        f" (acc, j) -> acc * 2 + if({dot} >= 0, 1, 0)))"
+        f" (acc, j) -> acc * 2 + if({dot} >= 0, 1, 0)))), 1)"
     )
 
 

@@ -49,8 +49,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from namedis_spark.functions.conceptsimi import IC_OFFSET
+
 ROOT = "CONCEPT_NET_ROOT"
-IC_OFFSET = 3.5  # setICOffset (clust.pl:277)
 LCS_MAX_DEPTH_SUM = 3  # calcTermCloseness depth gate (ConceptNet.pm:5630-5655)
 MAX_DAG_HEIGHT = 12  # closure-iteration bound (sanity guard, not a tuning knob)
 

@@ -14,8 +14,11 @@ Conventions:
   tfidf_cosine_pairs, jaccard_pairs, jaccard_type_pairs,
   year_discount_pairs, stage2_coauthor_boost) enumerate ALL within-block
   pairs so the oracle can replay them value-for-value — O(block²) by
-  design, for parity checking at small SF only. The production pipeline
-  routes through the capped/salted candidate paths
+  design, for parity checking at small SF only. Those scored by a Python
+  function (the CSLR and type-Jaccard queries, jaro_winkler_names)
+  enumerate through operators/blocking.block_pair_grid, the primitive the
+  pipeline's small-block scorer uses. The production pipeline routes
+  through the capped/salted candidate paths
   (operators/blocking.evidence_pairs + score_blocks_exhaustive); never
   lift the enumeration queries into a production plan.
 """
@@ -1610,33 +1613,17 @@ _DUCK_CSLR_V1 = (
 )
 
 
-# Blocks up to this many conversations are pair-enumerated inside ONE
-# per-block Python task (each vector crosses the Arrow boundary once —
-# worst case cap²/2 ≈ 0.5M pairs ≈ a few seconds of in-worker scoring);
-# bigger blocks route through the distributed self-join + mapInPandas
-# shape so a hot block parallelizes across the cluster instead of
-# pinning one task with an O(block²) loop. Values identical either way.
-CSLR_BLOCK_ENUM_CAP = 1024
-
-
 def _cslr_scored_pairs(spark, sf_dir, log_fn, out_col: str = "log_cslr"):
-    """Within-block CSLR pair scores, size-routed.
-
-    One transcript scan builds the per-conv (role-frequency map, block
-    key) side table. Blocks ≤ CSLR_BLOCK_ENUM_CAP enumerate and score
-    their pairs inside a per-block ``applyInPandas`` — each vector
-    crosses the Python boundary once, not once per pair (guide §8: the
-    all-join shape shipped two map payloads per pair row, ~450k map
-    cells through Arrow at sf0.1 for 225k pairs built from 1.5k
-    vectors). Blocks above the cap keep the distributed self-join +
-    mapInPandas shape (parallel across tasks — a single hot block must
-    not serialize into one worker). Pair set, pair order
-    (conv_id1 < conv_id2) and per-pair ``log_fn`` values are identical
-    on both routes. Still O(block²) by design — these are the
-    verification-only enumeration queries (module docstring); the
-    production pipeline scores through the capped/salted candidate
-    paths."""
+    """Within-block pair scores ``log_fn(vec1, vec2)`` over per-conv
+    role-frequency vectors. One transcript scan builds the per-conv
+    (role-frequency map, block key) side table; ``blocking.block_pair_grid``
+    enumerates each within-block pair once (conv_id1 < conv_id2), so a
+    vector crosses the Python boundary once per grid cell, not per pair,
+    and a hot block spreads over many cells. O(block²) by design: these are
+    the verification-only enumeration queries (module docstring)."""
     import pandas as pd
+
+    from namedis_spark.operators.blocking import block_pair_grid
 
     t = load_transcripts(spark, sf_dir)
     rf = t.groupBy(
@@ -1646,61 +1633,28 @@ def _cslr_scored_pairs(spark, sf_dir, log_fn, out_col: str = "log_cslr"):
         F.map_from_entries(F.collect_list(F.struct("role", "f"))).alias("vec"),
         F.min_by("role", "ti").alias("block_key"),
     )
-    sizes = side.groupBy("block_key").agg(F.count(F.lit(1)).alias("_bn"))
-    side = side.join(sizes, "block_key")
+    sizes = side.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
 
-    cols = ["block_key", "conv_id1", "conv_id2", out_col]
-    schema = (
-        f"block_key string, conv_id1 string, conv_id2 string, {out_col} double"
+    def kernel(rows, i1, i2):
+        ids = rows["conv_id"].to_numpy()
+        vecs = [dict(v) for v in rows["vec"]]
+        return pd.DataFrame(
+            {
+                "conv_id1": ids[i1],
+                "conv_id2": ids[i2],
+                out_col: [
+                    round(log_fn(vecs[a], vecs[b]), 6) for a, b in zip(i1, i2)
+                ],
+            }
+        )
+
+    return block_pair_grid(
+        side,
+        sizes,
+        "conv_id",
+        kernel,
+        f"block_key string, conv_id1 string, conv_id2 string, {out_col} double",
     )
-
-    def score_block(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        bk = key[0]
-        ids = pdf["conv_id"].tolist()
-        vecs = [dict(v) for v in pdf["vec"]]
-        order = sorted(range(len(ids)), key=lambda i: ids[i])
-        rows = []
-        for x, i in enumerate(order):
-            vi, ci = vecs[i], ids[i]
-            for j in order[x + 1 :]:
-                rows.append((bk, ci, ids[j], round(log_fn(vi, vecs[j]), 6)))
-        return pd.DataFrame(rows, columns=cols)
-
-    small_out = (
-        side.where(F.col("_bn") <= CSLR_BLOCK_ENUM_CAP)
-        .drop("_bn")
-        .groupBy("block_key")
-        .applyInPandas(score_block, schema)
-    )
-
-    big = side.where(F.col("_bn") > CSLR_BLOCK_ENUM_CAP).drop("_bn")
-    a = big.select(
-        "block_key", F.col("conv_id").alias("conv_id1"), F.col("vec").alias("v1")
-    )
-    b = big.select(
-        "block_key", F.col("conv_id").alias("conv_id2"), F.col("vec").alias("v2")
-    )
-    pairs = a.join(b, "block_key").where(F.col("conv_id1") < F.col("conv_id2"))
-
-    def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vals = [
-                round(log_fn(dict(v1), dict(v2)), 6)
-                for v1, v2 in zip(pdf["v1"], pdf["v2"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "block_key": pdf["block_key"],
-                    "conv_id1": pdf["conv_id1"],
-                    "conv_id2": pdf["conv_id2"],
-                    out_col: vals,
-                }
-            )
-
-    big_out = pairs.mapInPandas(score_batches, schema=schema)
-    return small_out.unionByName(big_out)
 
 
 @q("cslr_v1_pairs", _DUCK_CSLR_V1)
@@ -1745,15 +1699,16 @@ def cslr_role_pairs(spark, sf_dir):
 )
 def jaro_winkler_names(spark, sf_dir):
     """Jaro-Winkler similarity between distinct speaker-name surfaces
-    WITHIN a blocking key (north-star string channel) — the pair join is
-    an equi-join on the normalized-name block, as the pipeline scorer
-    does, never an O(V²) theta join over the whole name vocabulary.
+    WITHIN a blocking key (north-star string channel) — pairs are
+    enumerated per normalized-name block by ``blocking.block_pair_grid``,
+    as the pipeline's small-block scorer does, never by an O(V²) theta
+    join over the whole name vocabulary.
     Deterministic case/hyphen variants of each role stand in for the
     surface diversity real names have (same derivation in the oracle)."""
     import pandas as pd
-    import pyspark.sql.types as T
 
     from namedis_spark.functions.core import jaro_winkler
+    from namedis_spark.operators.blocking import block_pair_grid
 
     t = load_transcripts(spark, sf_dir)
     surfaces = (
@@ -1765,41 +1720,26 @@ def jaro_winkler_names(spark, sf_dir):
         )
         .distinct()
     )
-    pairs = (
-        surfaces.alias("a")
-        .join(
-            surfaces.alias("b"),
-            (F.col("a.block_key") == F.col("b.block_key"))
-            & (F.col("a.surface") < F.col("b.surface")),
+    sizes = surfaces.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
+
+    def kernel(rows, i1, i2):
+        names = rows["surface"].to_numpy()
+        n1, n2 = names[i1], names[i2]
+        return pd.DataFrame(
+            {
+                "name1": n1,
+                "name2": n2,
+                "jw": [round(jaro_winkler(x, y), 6) for x, y in zip(n1, n2)],
+            }
         )
-        .select(
-            F.col("a.block_key").alias("block_key"),
-            F.col("a.surface").alias("name1"),
-            F.col("b.surface").alias("name2"),
-        )
+
+    return block_pair_grid(
+        surfaces,
+        sizes,
+        "surface",
+        kernel,
+        "block_key string, name1 string, name2 string, jw double",
     )
-
-    schema = T.StructType(
-        [
-            T.StructField("block_key", T.StringType()),
-            T.StructField("name1", T.StringType()),
-            T.StructField("name2", T.StringType()),
-            T.StructField("jw", T.DoubleType()),
-        ]
-    )
-
-    def udf(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            pdf["jw"] = [
-                round(jaro_winkler(x, y), 6)
-                for x, y in zip(pdf["name1"], pdf["name2"])
-            ]
-            yield pdf[["block_key", "name1", "name2", "jw"]]
-
-    return pairs.mapInPandas(udf, schema=schema)
 
 
 @q(

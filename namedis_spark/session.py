@@ -24,7 +24,7 @@ _DEFAULTS = {
     # our small-byte shuffles are CPU-heavy (feature-map aggregation,
     # pair scoring), so coalescing them down to the 64MB byte target would
     # serialize them. The Python scoring kernels additionally group by
-    # their own salted bucket grid (see scoring._replicate_to_grid) because
+    # their own salted bucket grid (see blocking._replicate_to_grid) because
     # their cost is Python CPU and they must also break hot-block skew.
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # AQE's coalescing targets bytes, but our hot stages are Arrow-batched

@@ -72,6 +72,30 @@ def test_table_buckets_matches_arithmetic_form(spark):
     assert fast.count() == 160
 
 
+def test_table_buckets_stale_uniform_probe_stays_exact(spark, monkeypatch):
+    """A memoized probe that claims a uniform dim on what is now a ragged
+    corpus (data rewritten under an identical plan) must not null-pad the
+    shorter rows into wrong buckets: the per-row size guard sends them to
+    the exact walk."""
+    from namedis_spark.operators import similarity as S
+
+    emb = spark.createDataFrame(
+        [
+            (i, [((i * 37 + d * 11) % 19 - 9) / 3.0 for d in range(8 if i % 3 else 5)])
+            for i in range(40)
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    key = (id(emb.sparkSession), emb.semanticHash())
+    monkeypatch.setitem(S._PROBE_MEMO, key, (40, 8, 8))
+    fast = S.table_buckets(emb, n_tables=4, n_planes=5)
+    sigs = F.expr(
+        f"transform(sequence(0, 3), t -> {S.sig_expr_spark('t', '5', S.HYPERPLANE_SEED)})"
+    )
+    ref = emb.select("vec_id", F.posexplode(sigs).alias("tbl", "bucket"))
+    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, ref.collect()))
+
+
 # ---------------------------------------------------------------------------
 # dedup: Arrow-batched shingling vs the SQL md5 chain
 # ---------------------------------------------------------------------------
@@ -205,23 +229,66 @@ def test_closure_driver_path_matches_distributed(spark):
 
 
 # ---------------------------------------------------------------------------
-# cslr pair scoring: per-block enumeration vs distributed-join route
+# registry all-pairs queries: one within-block pair grid
 # ---------------------------------------------------------------------------
 
 
 def test_cslr_block_routes_agree(spark, monkeypatch):
-    """The size-routed pair scorer must produce the identical pair table
-    whichever side of CSLR_BLOCK_ENUM_CAP a block lands on."""
+    """The Python-scored all-pairs queries enumerate through
+    blocking.block_pair_grid. With BUCKET_ROWS=1 a block of n rows hashes
+    into n buckets (sf0.001 CSLR blocks hold up to 7 convs, name blocks 2
+    surfaces), so diagonal and cross-bucket cells both run; the pair table
+    must equal the default grid's, be canonical (id1 < id2) and
+    duplicate-free, and give each block exactly n(n-1)/2 rows."""
+    from collections import Counter
+
     import namedis_spark.queries as Q
+    from namedis_spark.functions.core import cslr_v2_log
+    from namedis_spark.operators import blocking
 
     sf = "/root/testdata/sf0.001"
-    from namedis_spark.functions.core import cslr_v2_log
+    queries = {
+        "cslr_v2_log": lambda: Q._cslr_scored_pairs(spark, sf, cslr_v2_log),
+        "jaccard_type_pairs": lambda: Q.jaccard_type_pairs(spark, sf),
+        "jaro_winkler_names": lambda: Q.jaro_winkler_names(spark, sf),
+    }
+    real_grid = blocking.block_pair_grid
+    for name, run in queries.items():
+        default = _sorted(run().collect())
+        seen_sizes = []
 
-    small = _sorted(Q._cslr_scored_pairs(spark, sf, cslr_v2_log).collect())
-    monkeypatch.setattr(Q, "CSLR_BLOCK_ENUM_CAP", 0)  # force the join route
-    big = _sorted(Q._cslr_scored_pairs(spark, sf, cslr_v2_log).collect())
-    assert small == big
-    assert len(small) > 0
+        def grid(rows, sizes, *args):
+            seen_sizes.append(sizes)
+            return real_grid(rows, sizes, *args)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(blocking, "BUCKET_ROWS", 1)
+            mp.setattr(blocking, "block_pair_grid", grid)
+            fine = _sorted(run().collect())
+        assert fine == default, name
+        assert all(r[1] < r[2] for r in fine), name
+        assert len({r[:3] for r in fine}) == len(fine), name
+
+        (sizes,) = seen_sizes
+        n = {r["block_key"]: r["n"] for r in sizes.collect()}
+        assert max(n.values()) >= 2, name
+        assert Counter(r[0] for r in fine) == {
+            k: v * (v - 1) // 2 for k, v in n.items() if v > 1
+        }, name
+
+
+@pytest.mark.parametrize("query", ["cslr_role_pairs", "jaro_winkler_names"])
+def test_pair_queries_run_one_grouped_map_node(spark, query):
+    """Plan-shape guard: an all-pairs query runs exactly one grouped-map
+    pandas node (the pair grid) and no per-pair mapInPandas route."""
+    import namedis_spark.queries as Q
+
+    df = Q.REGISTRY[query].spark_fn(spark, "/root/testdata/sf0.001")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FlatMapGroupsInPandas") == 1, final
+    assert "MapInPandas" not in final, final
 
 
 def _sorted(rows):

@@ -19,7 +19,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from namedis_spark.datagen import generate_transcripts
-from namedis_spark.operators import corpus, scoring
+from namedis_spark.operators import blocking, corpus, scoring
 from namedis_spark.operators.blocking import evidence_pairs
 from namedis_spark.operators.features import conversation_features
 from namedis_spark.operators.scoring import (
@@ -38,7 +38,8 @@ NUM_COLS = [
     "cslr_coauthor", "cslr_tool", "jw", "content_cos", "taxonomy_cos",
     "year_discount", "coauthor_boost", "ic_sum", "score",
 ]
-# forced grid geometry (module constants of operators/scoring.py)
+# forced grid geometry (module constants of operators/scoring.py and
+# operators/blocking.py)
 TARGET_PAIRS = 200
 MIN_SMALL_BUCKETS = 3
 
@@ -105,7 +106,7 @@ def run(spark):
     ).persist()
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(scoring, "TARGET_PAIRS_PER_GROUP", TARGET_PAIRS)
-        mp.setattr(scoring, "BUCKET_ROWS", bucket_rows)
+        mp.setattr(blocking, "BUCKET_ROWS", bucket_rows)
         grouped = score_pairs_grouped(spark, pairs, prep, side, params)
         exhaustive = score_blocks_exhaustive(
             spark, prep, side, params,
