@@ -76,12 +76,13 @@ def main() -> None:
     ap.add_argument(
         "--fresh-cache",
         action="store_true",
-        help="clear the feature cache between reps (cold per-query cost)",
+        help="release the session's memos between reps (cold per-query cost)",
     )
     args = ap.parse_args()
 
-    from namedis_spark.queries import REGISTRY, clear_feature_cache
+    from namedis_spark.queries import REGISTRY
     from namedis_spark.session import get_spark
+    from namedis_spark.state import state
 
     spark = get_spark(
         app_name="namedis-bench-extra",
@@ -109,7 +110,7 @@ def main() -> None:
         times = []
         for _ in range(args.reps):
             if args.fresh_cache:
-                clear_feature_cache()
+                state(spark).release()
             dt, n = _timed(spark, name, fn, args.noop)
             times.append(dt)
             print(f"# {name}: rows={n} t={dt}s", file=sys.stderr)

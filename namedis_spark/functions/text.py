@@ -459,32 +459,3 @@ def fingerprint(text: str | None) -> str:
     Portable across Spark (F.md5) and DuckDB (md5)."""
     norm = "".join(tokenize(text))
     return hashlib.md5(norm.encode("utf-8")).hexdigest()
-
-
-def char_ngrams(text: str | None, n: int = 3) -> list[str]:
-    """Character n-gram shingles over the normalized text (dedup features)."""
-    norm = " ".join(tokenize(text))
-    if len(norm) < n:
-        return [norm] if norm else []
-    return [norm[i : i + n] for i in range(len(norm) - n + 1)]
-
-
-def quality_features(text: str | None) -> dict[str, float]:
-    """Heuristic quality scoring (length / punct / stopword ratios) for the
-    training-data-pipeline ops. Mirrors the reference's language/validity
-    filters in spirit (clean.pl:317-336,445-541)."""
-    if not text:
-        return {"n_chars": 0.0, "n_tokens": 0.0, "stopword_ratio": 0.0,
-                "alpha_ratio": 0.0, "mean_token_len": 0.0}
-    toks = tokenize(text)
-    n_tok = len(toks)
-    sw = set(STOPWORDS)
-    n_sw = sum(1 for t in toks if t in sw)
-    n_alpha = sum(1 for c in text if c.isalpha())
-    return {
-        "n_chars": float(len(text)),
-        "n_tokens": float(n_tok),
-        "stopword_ratio": n_sw / n_tok if n_tok else 0.0,
-        "alpha_ratio": n_alpha / len(text),
-        "mean_token_len": sum(len(t) for t in toks) / n_tok if n_tok else 0.0,
-    }

@@ -19,6 +19,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from namedis_spark.state import tracked_persist
+
 # exterm.pl constants
 IAF_LEAST_VALUE = 0.5  # exterm.pl:17
 SCALE_DOWN_PUBS = 3  # exterm.pl:27 SCALE_DOWN_AUTHOR_CONTRIB_WITH_LESS_PUB_THAN_IT
@@ -106,8 +108,6 @@ def term_weights(features: DataFrame) -> DataFrame:
     # vocab-sized; persisted so the scalar max below and the returned
     # projection share one evaluation of the hit-freq join chain instead
     # of running it twice (guide §5)
-    from namedis_spark.caching import tracked_persist
-
     per_term = tracked_persist(per_term)
     max_author_num = per_term.agg(F.max("author_num_nonforay")).collect()[0][0]
 
@@ -390,7 +390,7 @@ def _iterate_ambiguity_frame(df, rounds: int):
 # universe of a 10^12-turn corpus can reach 10^7-10^8 distinct surfaces.
 # 10M rows x (2 short strings + 2 name parts + 2 numerics) is ~1 GB of
 # pandas — safe for the constant driver allotment; past it the driver-side
-# fast path must NOT be attempted. Override with SPARK_GRAFT_MAX_DRIVER_NAMES.
+# fast path must NOT be attempted. Callers may pass a lower ``max_rows``.
 AMBIG_MAX_DRIVER_NAMES = 10_000_000
 
 
@@ -398,7 +398,7 @@ def key_ambiguity_pdf_bounded(
     features: DataFrame,
     rounds: int = AMBIG_MAX_ROUNDS,
     hits: DataFrame | None = None,
-    max_rows: int | None = None,
+    max_rows: int = AMBIG_MAX_DRIVER_NAMES,
 ):
     """Bounded driver-side fixed point: pull the seed table only if the
     name universe fits the documented driver bound, else return ``None``
@@ -411,12 +411,6 @@ def key_ambiguity_pdf_bounded(
     the scaling harness those serial barriers were the side-table stage's
     dominant non-scaling cost.
     """
-    import os
-
-    if max_rows is None:
-        max_rows = int(
-            os.environ.get("SPARK_GRAFT_MAX_DRIVER_NAMES", AMBIG_MAX_DRIVER_NAMES)
-        )
     df = _ambiguity_seed(features, hits).limit(max_rows + 1).toPandas()
     if len(df) > max_rows:
         return None

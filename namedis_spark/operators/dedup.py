@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 
 from namedis_spark.functions.sqlexpr import fingerprint_expr, tokens_expr
 
-from namedis_spark.caching import tracked_persist
+from namedis_spark.state import tracked_persist
 
 # MinHash parameters: h_i(x) = (a_i * x + b_i) mod P over the md5-derived
 # 60-bit shingle key. P is a Mersenne-ish prime below 2^61 so products fit

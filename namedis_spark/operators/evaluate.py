@@ -15,6 +15,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from namedis_spark.state import tracked_persist
+
 
 def _nc2(col):
     return (F.col(col) * (F.col(col) - 1) / 2).cast("double")
@@ -185,8 +187,6 @@ def result_stat(prf: DataFrame) -> DataFrame:
         )
         .withColumn("micro_f1", f1_of("macro_p", "macro_r"))
     )
-    from namedis_spark.caching import tracked_persist
-
     # referenced three times below (thres filter + two summary rows)
     best = tracked_persist(
         by_thres.orderBy(F.desc(F.round("macro_f1", 6)), F.asc("thres")).limit(1)

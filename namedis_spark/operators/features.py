@@ -29,6 +29,7 @@ from namedis_spark.functions.sqlexpr import (
     lemma_rules_case,
     norm_name_expr,
 )
+from namedis_spark.state import state
 
 import pyspark.sql.types as T
 
@@ -137,20 +138,18 @@ def conversation_features(transcripts: DataFrame) -> DataFrame:
 
 
 def _irregulars_df(spark) -> DataFrame:
-    """Per-session memo of the irregular-lemma lookup table: the table is
-    a constant, and re-running createDataFrame per query call re-paid the
-    driver-side conversion on every term-exploding query. The memo lives on
-    the session object itself, so it dies with the session, and an entry is
-    only returned to the session it was built on."""
+    """The irregular-lemma lookup table, memoized in the session's state:
+    the table is a constant, and re-running createDataFrame per query call
+    re-paid the driver-side conversion on every term-exploding query. An
+    entry is only returned to the session it was built on."""
     from namedis_spark.functions.text import IRREGULAR_LEMMAS
 
-    df = getattr(spark, "_namedis_irregulars_df", None)
-    if df is None or df.sparkSession is not spark:
-        df = spark.createDataFrame(
+    st = state(spark)
+    if st.irregulars is None or st.irregulars.sparkSession is not spark:
+        st.irregulars = spark.createDataFrame(
             sorted(IRREGULAR_LEMMAS.items()), "_tok string, _irr_lemma string"
         )
-        spark._namedis_irregulars_df = df
-    return df
+    return st.irregulars
 
 
 def exploded_content_terms(

@@ -20,15 +20,6 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("n_bytes", T.LongType(), False),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

@@ -24,7 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from namedis_spark.caching import tracked_persist
+from namedis_spark.state import file_identity, state, tracked_persist
 
 HYPERPLANE_SEED = 7
 ANN_N_PLANES = 6
@@ -104,15 +104,12 @@ def adaptive_planes_expr(count_expr: str) -> str:
     )
 
 
-_PROBE_MEMO: dict[tuple[int, int], tuple[int, int, int]] = {}
-
-
 def _corpus_probe(df: DataFrame, col: str = "embedding") -> tuple[int, int, int]:
-    """Memoized (n_rows, min_dim, max_dim) of the corpus in ONE tiny
-    aggregate job, keyed by (session, semantic plan hash) and bounded at
-    256 entries: the values are pure functions of the corpus, so one probe
-    per session suffices. Feeds the adaptive plane count and the
-    literal-plane emission below."""
+    """(n_rows, min_dim, max_dim) of the corpus in ONE tiny aggregate job,
+    memoized in the session's state on (plan hash, identity of the files
+    it reads), so repeated calls over one corpus (the bench loop, LSH
+    probes over a shared table) pay it once. Feeds the adaptive plane
+    count and the literal-plane emission below."""
     def probe() -> tuple[int, int, int]:
         r = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -122,14 +119,13 @@ def _corpus_probe(df: DataFrame, col: str = "embedding") -> tuple[int, int, int]
         return (int(r["n"]), int(r["lo"] or 0), int(r["hi"] or 0))
 
     try:
-        key = (id(df.sparkSession), df.semanticHash())
+        key = (df.semanticHash(), file_identity(df.sparkSession, df.inputFiles()))
     except Exception:
         return probe()
-    if key not in _PROBE_MEMO:
-        if len(_PROBE_MEMO) > 256:
-            _PROBE_MEMO.clear()
-        _PROBE_MEMO[key] = probe()
-    return _PROBE_MEMO[key]
+    probes = state(df.sparkSession).probes
+    if key not in probes:
+        probes[key] = probe()
+    return probes[key]
 
 
 def _plane_coeff(t: int, j: int, d: int, seed: int) -> float:
@@ -227,10 +223,8 @@ def table_buckets(
 
     ``n_planes=None`` → adaptive: planes from the corpus count (a
     single-row aggregate collected to the driver — a scalar, never data;
-    the oracle computes the identical count via a scalar subquery). The
-    probe is memoized per (session, semantic plan) so repeated
-    invocations over the same corpus — the bench loop, LSH probes over a
-    shared table — pay the scan once per session, not per call.
+    the oracle computes the identical count via a scalar subquery),
+    memoized per session and input (``_corpus_probe``).
 
     Plane coefficients are emitted as a LITERAL (table, plane, dim)
     tensor (see ``_planes_literal``): they are row-invariant, and the

@@ -50,6 +50,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from namedis_spark.functions.conceptsimi import IC_OFFSET
+from namedis_spark.state import tracked_persist
 
 ROOT = "CONCEPT_NET_ROOT"
 LCS_MAX_DEPTH_SUM = 3  # calcTermCloseness depth gate (ConceptNet.pm:5630-5655)
@@ -88,6 +89,11 @@ def apply_exclusions(
 # corpus.key_ambiguity_pdf_bounded. Past either bound the iterative
 # frontier-join loop below runs unchanged.
 CLOSURE_DRIVER_EDGE_BOUND = 200_000
+# Driver memory at the cap (5M rows, 19-byte terms, measured): the BFS's
+# three column lists hold ~130 MB (list slots; the strings are the DAG's
+# own nodes) and the Arrow table built from them ~245 MB, a ~365 MB peak
+# (a list of 3-tuples peaked at ~675 MB). The lists are dropped once the
+# table exists.
 CLOSURE_DRIVER_ROW_CAP = 5_000_000
 
 
@@ -98,8 +104,9 @@ def _closure_driver_bfs(
     row_cap: int = CLOSURE_DRIVER_ROW_CAP,
 ):
     """Layered min-depth BFS over driver-resident edges. Returns
-    (rows, height) or None when the closure would exceed ``row_cap``
-    (caller falls back to the distributed loop)."""
+    ((terms, ancestors, depths), height) — three column lists — or None
+    when the closure would exceed ``row_cap`` (caller falls back to the
+    distributed loop)."""
     parents: dict[str, list[str]] = {}
     nodes: set[str] = set()
     for t, p in edge_rows:
@@ -108,7 +115,8 @@ def _closure_driver_bfs(
         nodes.add(p)
     if extra:
         nodes.update(extra)
-    rows: list[tuple[str, str, int]] = [(n, n, 0) for n in nodes]
+    terms = list(nodes)
+    ancestors, depths = list(terms), [0] * len(terms)
     seen: dict[str, set[str]] = {n: {n} for n in nodes}
     frontier: list[tuple[str, str]] = [(n, n) for n in nodes]
     height = 0
@@ -123,11 +131,13 @@ def _closure_driver_bfs(
         if not nxt:
             break
         height = depth
-        rows.extend((t, p, depth) for t, p in nxt)
-        if len(rows) > row_cap:
+        terms.extend(t for t, _ in nxt)
+        ancestors.extend(p for _, p in nxt)
+        depths.extend([depth] * len(nxt))
+        if len(terms) > row_cap:
             return None
         frontier = nxt
-    return rows, height
+    return (terms, ancestors, depths), height
 
 
 def ancestor_closure(
@@ -175,7 +185,7 @@ def ancestor_closure(
                 max_height,
             )
             if res is not None:
-                rows, height = res
+                (terms, ancestors, depths), height = res
                 e_raw.unpersist()
                 if stats is not None:
                     stats["rounds"] = height
@@ -185,11 +195,12 @@ def ancestor_closure(
                 spark = edges.sparkSession
                 tbl = pa.table(
                     {
-                        "term": pa.array([r[0] for r in rows], pa.string()),
-                        "ancestor": pa.array([r[1] for r in rows], pa.string()),
-                        "depth": pa.array([r[2] for r in rows], pa.int32()),
+                        "term": pa.array(terms, pa.string()),
+                        "ancestor": pa.array(ancestors, pa.string()),
+                        "depth": pa.array(depths, pa.int32()),
                     }
                 )
+                del terms, ancestors, depths, res  # only the Arrow copy stays
                 # arrow table in (skips the pandas conversion); checkpoint:
                 # downstream plans reference the closure several times —
                 # without it every scan re-ships the parallelized driver
@@ -336,8 +347,6 @@ def term_ic_dag(term_freqs: DataFrame, closure_att: DataFrame) -> DataFrame:
     MC scalar is collected: the returned DataFrame reads the cached rows
     instead of re-running the corpus-sized explode-join-aggregate a second
     time (guide §5 — reuse beats recompute when the intermediate is tiny)."""
-    from namedis_spark.caching import tracked_persist
-
     freqs = tracked_persist(passup_freqs(term_freqs, closure_att))
     mc = freqs.agg(F.max("freq")).collect()[0][0]
     return freqs.select(

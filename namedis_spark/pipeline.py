@@ -54,6 +54,7 @@ from namedis_spark.operators.scoring import (
     score_pairs_grouped,
 )
 from namedis_spark.sources.checkpoint import MANIFEST, CheckpointStore
+from namedis_spark.state import file_identity
 
 # the snapshots a run writes, in pipeline order
 STAGES = ("features", "scored", "seed_merge", "cc", "assignments")
@@ -89,20 +90,13 @@ def input_fingerprint(
     fingerprint; both are stable across driver processes. Other inputs are
     identified by the plan's ``semanticHash()``, which holds only within
     one driver process. Runs no Spark job: the file list comes from the
-    already-resolved file index, the stats from the Hadoop filesystem
-    client and the plan from the analyzer."""
-    files = sorted(transcripts.inputFiles())
+    already-resolved file index, the stats from ``state.file_identity``
+    (the Hadoop filesystem client) and the plan from the analyzer."""
+    files = transcripts.inputFiles()
     if files:
-        sc = transcripts.sparkSession.sparkContext
-        conf = sc._jsc.hadoopConfiguration()
-        stats = []
-        for f in files:
-            path = sc._jvm.org.apache.hadoop.fs.Path(f)
-            st = path.getFileSystem(conf).getFileStatus(path)
-            stats.append([f, st.getLen(), st.getModificationTime()])
         plan = transcripts._jdf.queryExecution().analyzed().canonicalized().toString()
         source = {
-            "files": stats,
+            "files": file_identity(transcripts.sparkSession, files),
             "plan_sha256": hashlib.sha256(plan.encode()).hexdigest(),
         }
     else:

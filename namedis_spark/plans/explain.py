@@ -21,10 +21,6 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     out = []
     for line in formatted_plan(df).splitlines():
@@ -46,10 +42,6 @@ def read_schema_columns(df: DataFrame) -> list[str]:
                 if ":" in part:
                     cols.append(part.split(":")[0])
     return cols
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")
 
 
 def quadratic_join_nodes(df: DataFrame) -> list[str]:

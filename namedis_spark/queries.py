@@ -34,11 +34,11 @@ from pyspark.sql import DataFrame, SparkSession
 from namedis_spark.functions.sqlexpr import (
     content_terms_expr,
     fingerprint_expr,
-    lemma_case,
     norm_name_expr,
     stopword_list_sql,
     tokens_expr,
 )
+from namedis_spark.state import file_identity, state, tracked_persist
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -68,24 +68,26 @@ def transcripts_sql(dialect: str) -> str:
     """
 
 
-_VIEWS_REGISTERED: dict[int, str] = {}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the input tables as temp views — memoized per (session,
-    sf_dir): every registration re-reads ten parquet footers on the driver
-    (~1s), and nearly every registry query calls this, so the un-memoized
-    form re-paid that per query (guide §6 — cache file/metadata listings).
-    Re-registers whenever the session's last-registered dir differs, so
-    multi-SF sessions (tests, the oracle gate) stay correct."""
-    # tableExists guards against id() reuse after a session is GC'd
-    if _VIEWS_REGISTERED.get(id(spark)) == sf_dir and spark.catalog.tableExists(
-        SPARK_TABLES[0]
-    ):
+    """Register the input tables as temp views, memoized in the session's
+    state on (sf_dir, identity of the table files): registering re-reads
+    parquet footers on the driver (~1 s) and nearly every registry query
+    calls this (guide §6). Files rewritten since sf_dir was last registered
+    drop its feature table and refresh every cached plan over them — a new
+    read of a rewritten path otherwise matches the old cache entry."""
+    st = state(spark)
+    paths = [f"{sf_dir}/{t}.parquet" for t in SPARK_TABLES]
+    files = file_identity(spark, paths)
+    if st.views == sf_dir and st.files[sf_dir] == files:
         return
-    for t in SPARK_TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    _VIEWS_REGISTERED[id(spark)] = sf_dir
+    if st.files.get(sf_dir, files) != files:
+        if sf_dir in st.features:
+            st.features.pop(sf_dir).unpersist()
+        for path in paths:
+            spark.catalog.refreshByPath(path)
+    for t, path in zip(SPARK_TABLES, paths):
+        spark.read.parquet(path).createOrReplaceTempView(t)
+    st.views, st.files[sf_dir] = sf_dir, files
 
 
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,47 +95,16 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(transcripts_sql("spark"))
 
 
-_FEATURE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_FEATURE_CACHE_MAX = 4  # LRU bound: long-lived sessions iterating many
-# sf_dirs must not accumulate persisted DataFrames
-
-
 def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(session, sf_dir) LRU-cached feature table — several queries fan
-    out multiple aggregations over it; persisting avoids re-running the
-    feature extraction scan per action. Oldest entries are unpersisted once
-    the bound is hit; `clear_feature_cache` releases everything (call it on
-    session close)."""
+    """The session's persisted feature table for sf_dir: several queries
+    fan out aggregations over it (one extraction scan, not one per
+    action)."""
     from namedis_spark.operators.features import conversation_features
 
-    key = (id(spark), sf_dir)
-    if key in _FEATURE_CACHE:
-        _FEATURE_CACHE[key] = _FEATURE_CACHE.pop(key)  # move to MRU end
-        return _FEATURE_CACHE[key]
-    while len(_FEATURE_CACHE) >= _FEATURE_CACHE_MAX:
-        oldest = next(iter(_FEATURE_CACHE))
-        try:
-            _FEATURE_CACHE.pop(oldest).unpersist()
-        except Exception:
-            pass  # session may already be stopped
-    _FEATURE_CACHE[key] = conversation_features(
-        load_transcripts(spark, sf_dir)
-    ).persist()
-    return _FEATURE_CACHE[key]
-
-
-def clear_feature_cache() -> None:
-    """Unpersist and drop every cached feature table plus the tracked
-    operator intermediates (session-close hook)."""
-    from namedis_spark.caching import release_all
-
-    while _FEATURE_CACHE:
-        _, df = _FEATURE_CACHE.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    release_all()
+    register_views(spark, sf_dir)  # drops the table if the files changed
+    return state(spark).feature_table(
+        sf_dir, lambda: conversation_features(spark.sql(transcripts_sql("spark")))
+    )
 
 
 def _assert_golden(
@@ -2112,13 +2083,6 @@ def term_closeness_q(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _duck_replace_chain(col: str, pairs) -> str:
-    expr = col
-    for a, b in pairs:
-        expr = f"replace({expr}, '{a}', \"{b}\")" if b == "'" else f"replace({expr}, '{a}', '{b}')"
-    return expr
-
-
 def _xml_restore_oracle() -> str:
     from namedis_spark.operators.textops import XML_ENTITIES
 
@@ -3187,8 +3151,6 @@ def name_reverse_votes(spark, sf_dir):
     import pyspark.sql.types as T
 
     from namedis_spark.functions.nameorder import derived_name_exprs, name_reverse_vote
-
-    from namedis_spark.caching import tracked_persist
 
     t = load_transcripts(spark, sf_dir)
     n1, n2 = derived_name_exprs("spark", "conv_id")

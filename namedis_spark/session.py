@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from namedis_spark.state import state
+
 # Defaults chosen for scale-out behavior, not just local speed:
 #  - AQE on: runtime coalescing + skew-join splitting (hot blocking keys).
 #  - Arrow on: every Python-side op is an Arrow-batched pandas UDF; no
@@ -108,9 +110,6 @@ def get_spark(
     return spark
 
 
-_WARMED: set[int] = set()
-
-
 def _warm_session(spark: SparkSession) -> None:
     """One-time, data-independent engine warm-up per session: a trivial
     aggregate job initializes the task scheduler / codegen / shuffle
@@ -119,13 +118,10 @@ def _warm_session(spark: SparkSession) -> None:
     spark.python.worker.reuse). Heavyweight init belongs to session
     construction, not to whichever query happens to run first (guide
     §4.5); nothing here touches input data or caches any result."""
-    key = id(spark)
-    if key in _WARMED:
+    st = state(spark)
+    if st.warmed:
         return
-    _WARMED.add(key)
-    if len(_WARMED) > 64:
-        _WARMED.clear()
-        _WARMED.add(key)
+    st.warmed = True
     try:
         import pyspark.sql.functions as F
 
@@ -140,13 +136,10 @@ def _warm_session(spark: SparkSession) -> None:
 
 
 def close_session(spark: SparkSession) -> None:
-    """Stop a session cleanly: release the query-registry feature cache
-    (persisted DataFrames) before stopping the JVM."""
-    from namedis_spark.caching import release_all
-    from namedis_spark.queries import clear_feature_cache
-
-    clear_feature_cache()
-    release_all()
+    """Stop a session cleanly: release its state (unpersist the registry's
+    feature tables and every ``tracked_persist`` intermediate, forget the
+    views and probes; see ``namedis_spark.state``), then stop the JVM."""
+    state(spark).release()
     spark.stop()
 
 

@@ -310,6 +310,7 @@ def test_irregulars_memo_never_crosses_sessions(spark):
     session says otherwise — the id(spark)-keyed memo could hand a reused
     id a dead session's DataFrame."""
     from namedis_spark.operators.features import _irregulars_df
+    from namedis_spark.state import state
 
     other = spark.newSession()
     mine = _irregulars_df(spark)
@@ -320,7 +321,7 @@ def test_irregulars_memo_never_crosses_sessions(spark):
     assert theirs is not mine and theirs.sparkSession is other
 
     # an entry bound to another session is rebuilt, never returned
-    other._namedis_irregulars_df = mine
+    state(other).irregulars = mine
     rebuilt = _irregulars_df(other)
     assert rebuilt is not mine and rebuilt.sparkSession is other
     assert rebuilt.count() == mine.count()

@@ -78,6 +78,7 @@ def test_table_buckets_stale_uniform_probe_stays_exact(spark, monkeypatch):
     shorter rows into wrong buckets: the per-row size guard sends them to
     the exact walk."""
     from namedis_spark.operators import similarity as S
+    from namedis_spark.state import file_identity, state
 
     emb = spark.createDataFrame(
         [
@@ -86,8 +87,8 @@ def test_table_buckets_stale_uniform_probe_stays_exact(spark, monkeypatch):
         ],
         "vec_id long, embedding array<double>",
     )
-    key = (id(emb.sparkSession), emb.semanticHash())
-    monkeypatch.setitem(S._PROBE_MEMO, key, (40, 8, 8))
+    key = (emb.semanticHash(), file_identity(spark, emb.inputFiles()))
+    monkeypatch.setitem(state(spark).probes, key, (40, 8, 8))
     fast = S.table_buckets(emb, n_tables=4, n_planes=5)
     sigs = F.expr(
         f"transform(sequence(0, 3), t -> {S.sig_expr_spark('t', '5', S.HYPERPLANE_SEED)})"
