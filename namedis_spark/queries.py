@@ -81,8 +81,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     if st.views == sf_dir and st.files[sf_dir] == files:
         return
     if st.files.get(sf_dir, files) != files:
-        if sf_dir in st.features:
-            st.features.pop(sf_dir).unpersist()
+        st.drop_feature_table(sf_dir)
         for path in paths:
             spark.catalog.refreshByPath(path)
     for t, path in zip(SPARK_TABLES, paths):
@@ -1753,7 +1752,7 @@ def tfidf_cosine_pairs(spark, sf_dir):
     shipment. (The python twin functions.core.tfidf_cosine is exercised by
     the pipeline scorer and unit tests.)"""
     f = _features(spark, sf_dir)  # already persisted by the feature cache
-    n = f.count()
+    n = state(spark).feature_count(sf_dir)  # counted once per build
     tf = f.select(
         "conv_id", "block_key", F.explode("term_freq").alias("term", "tfv")
     )
@@ -2459,14 +2458,12 @@ _DUCK_ANN = f"""
 """
 
 
-def _ann_brute(spark, sf_dir):
+def _ann_brute(emb):
     """brute-force cosine top-k (queries = vec_id < 10) — the exactness
     baseline for ANN; ranking on round-6 cosine with id tie-break so both
     engines order identically."""
     from namedis_spark.operators.similarity import brute_force_topk
 
-    register_views(spark, sf_dir)
-    emb = spark.table("embeddings")
     return brute_force_topk(emb, emb.where(F.col("vec_id") < 10), k=_ANN_K)
 
 
@@ -2581,14 +2578,12 @@ def _ann_lsh_oracle() -> str:
     """
 
 
-def _ann_lsh(spark, sf_dir):
+def _ann_lsh(emb):
     """bucketed ANN top-k (queries = vec_id < 10) — the registered scale
     path: multi-table hyperplane LSH candidates + exact cosine + window
     rank. Recall vs the brute-force baseline is asserted in tests."""
     from namedis_spark.operators.similarity import lsh_topk
 
-    register_views(spark, sf_dir)
-    emb = spark.table("embeddings")
     return lsh_topk(
         emb,
         emb.where(F.col("vec_id") < 10),
@@ -2673,7 +2668,7 @@ def _ivf_topk_oracle() -> str:
     """
 
 
-def _ann_ivf(spark, sf_dir):
+def _ann_ivf(emb):
     """IVF ANN top-k (queries = vec_id < 10): per-row nearest-cell
     assignment against a literal codebook (pure projection, no shuffle),
     n_probe-cell probing, candidate equi-join on cell, exact cosine +
@@ -2682,8 +2677,6 @@ def _ann_ivf(spark, sf_dir):
     path (ivf_train) is covered by recall/determinism tests."""
     from namedis_spark.operators.similarity import ivf_topk
 
-    register_views(spark, sf_dir)
-    emb = spark.table("embeddings")
     return ivf_topk(
         emb,
         emb.where(F.col("vec_id") < 10),
@@ -2725,10 +2718,12 @@ def ann_topk(spark, sf_dir):
     def tag(df, variant):
         return df.select(F.lit(variant).alias("variant"), *cols)
 
+    register_views(spark, sf_dir)
+    emb = spark.table("embeddings")
     return (
-        tag(_ann_brute(spark, sf_dir), "brute")
-        .unionByName(tag(_ann_lsh(spark, sf_dir), "lsh"))
-        .unionByName(tag(_ann_ivf(spark, sf_dir), "ivf"))
+        tag(_ann_brute(emb), "brute")
+        .unionByName(tag(_ann_lsh(emb), "lsh"))
+        .unionByName(tag(_ann_ivf(emb), "ivf"))
     )
 
 

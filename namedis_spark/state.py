@@ -7,7 +7,8 @@ follow ``file_identity``, so a file rewritten in place misses.
 
 Held: ``warmed`` (engine warm-up ran); ``views``, the sf_dir the registry's
 temp views read, and ``files``, each registered sf_dir's file identity;
-``features``, the registry's feature tables, an LRU per sf_dir; ``probes``
+``features``, the registry's feature tables, an LRU per sf_dir, and
+``feature_rows``, their row counts; ``probes``
 (``similarity._corpus_probe``); ``tracked`` (``tracked_persist``'s FIFO);
 ``irregulars``, the irregular-lemma table.
 """
@@ -62,6 +63,7 @@ class SessionState:
     views: str | None = None
     files: dict = field(default_factory=dict)
     features: OrderedDict = field(default_factory=OrderedDict)
+    feature_rows: dict = field(default_factory=dict)
     probes: dict = field(default_factory=dict)
     tracked: list = field(default_factory=list)
     irregulars: DataFrame | None = None
@@ -73,15 +75,27 @@ class SessionState:
             self.features.move_to_end(key)
         else:
             while len(self.features) >= FEATURE_CACHE_MAX:
-                _unpersist(self.features.popitem(last=False)[1])
+                self.drop_feature_table(next(iter(self.features)))
             self.features[key] = build().persist()
         return self.features[key]
+
+    def feature_count(self, key: str) -> int:
+        """Row count of the table under ``key``, counted once per build."""
+        if key not in self.feature_rows:
+            self.feature_rows[key] = self.features[key].count()
+        return self.feature_rows[key]
+
+    def drop_feature_table(self, key: str) -> None:
+        if key in self.features:
+            _unpersist(self.features.pop(key))
+        self.feature_rows.pop(key, None)
 
     def release(self) -> None:
         """Unpersist and forget every memo; ``warmed`` stays."""
         for df in [*self.features.values(), *self.tracked]:
             _unpersist(df)
         self.features.clear()
+        self.feature_rows.clear()
         self.tracked.clear()
         self.probes.clear()
         self.files.clear()

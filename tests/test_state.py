@@ -108,8 +108,10 @@ from namedis_spark.session import close_session, get_spark
 from namedis_spark.state import state
 
 d = sys.argv[1]
-# feature cache, corpus probe, tracked_persist
-QUERIES = ("tool_similarity", "ann_topk", "minhash_lsh_candidates")
+# feature cache (plus its row count), corpus probe, tracked_persist
+QUERIES = (
+    "tool_similarity", "tfidf_cosine_pairs", "ann_topk", "minhash_lsh_candidates"
+)
 
 
 def rows(spark, name):
@@ -128,8 +130,8 @@ def second_build_runs_no_job(spark, name):
 
 
 def empty(st):
-    return (st.views, st.files, st.features, st.probes, st.tracked,
-            st.irregulars) == (None, {}, {}, {}, [], None)
+    return (st.views, st.files, st.features, st.feature_rows, st.probes,
+            st.tracked, st.irregulars) == (None, {}, {}, {}, {}, [], None)
 
 
 spark = get_spark(master="local[1]", shuffle_partitions=2)
@@ -175,12 +177,13 @@ spark.stop()
 
 
 def test_memos_survive_close_and_in_place_rewrite(tmp_path):
-    """A feature-cached registry query, ann_topk (corpus probe) and a
-    tracked_persist query: a second build hits (same objects, no Spark
-    job); close_session empties the state and a new session starts empty;
-    after the inputs are rewritten in place with fewer rows, each query
-    equals a fresh computation over the new files. Runs in its own driver
-    process so the suite's session is not stopped."""
+    """Feature-cached registry queries (one reading the table's memoized
+    row count), ann_topk (corpus probe) and a tracked_persist query: a
+    second build hits (same objects, no Spark job); close_session empties
+    the state and a new session starts empty; after the inputs are
+    rewritten in place with fewer rows, each query equals a fresh
+    computation over the new files. Runs in its own driver process so the
+    suite's session is not stopped."""
     from scripts.regen_goldens import DEFAULT_SF_DIRS
 
     src = next(p for p in DEFAULT_SF_DIRS if p.endswith("sf0.001"))
